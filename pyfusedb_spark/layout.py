@@ -3,7 +3,7 @@
 The ``index/bucket=K`` hive value encodes which tier a posting segment
 belongs to, and sorting chunk rows by ``bucket`` must equal sorting by
 doc range (query-side concatenation relies on it — operators/query.py
-``_fetch_chunks``):
+``TermPostings.from_chunks``):
 
     0 .. n_buckets-1                   base batch-build doc-range buckets
     STREAM_GEN_BUCKET_BASE ..          compacted stream segments (tiered

@@ -81,6 +81,7 @@ from pyfusedb_spark.functions.udfs import (
     make_tpart_build_task,
     sha256_col,
 )
+from pyfusedb_spark.layout import visible_bucket_components
 from pyfusedb_spark.operators.ids import assign_doc_ids
 from pyfusedb_spark.sources.catalog import ManifestCatalog, write_json_atomic
 
@@ -540,6 +541,21 @@ def build_index(
 
     ensure_shipped(spark)
     cat = ManifestCatalog(out_dir)
+    stats_path = fsio.join(out_dir, "stats.json")
+    # a root carrying streamed appends (streaming/incremental.py) is
+    # refused, resume or not: the pre-wave cleanup below removes tpart
+    # dirs under EVERY bucket (streamed ones included), and the final
+    # stats.json rewrite drops the stream state that makes them visible
+    if any(
+        k.startswith("stream_batch=") for k in cat.snapshot().get("manifests", {})
+    ) or (
+        fsio.exists(stats_path)
+        and visible_bucket_components(fsio.read_json(stats_path)) is not None
+    ):
+        raise ValueError(
+            f"{out_dir} holds streamed appends; build_index would drop "
+            "them — build into a fresh directory"
+        )
     # drop staging dirs a killed run left behind: they'd match the
     # `dir/*/*.parquet` lexicon/stats globs and double-count chunks
     cat.clean_orphan_staging(out_dir)
@@ -551,7 +567,6 @@ def build_index(
     ds_dir = fsio.join(out_dir, "doc_stats")
     idx_dir = fsio.join(out_dir, "index")
     lex_dir = fsio.join(out_dir, "lexicon")
-    stats_path = fsio.join(out_dir, "stats.json")
 
     # ---------------- stage tf ----------------
     # Three narrow jobs, zero shuffles, no caching of wide intermediates

@@ -6,9 +6,12 @@ with:
 
 - a *driver fast path*: predicate-pushdown fetch of the ≤|q| posting
   chunks (Parquet row-group pruning on the term-sorted index files),
-  numpy decode, and **block-max WAND** top-k (R4 + C4 in SURVEY.md §2) —
-  the reference has no early termination at all (full sort,
-  ``app/InvertedIndex.py:384``);
+  decoded ONCE per term into a score-ready :class:`TermPostings` (doc
+  ids, BM25 doc-side partials, tfs, block metadata) that the driver LRU
+  keeps; a warm search is dict lookups plus numpy scoring over those
+  arrays — exhaustive, vectorized block-max ("bmx") or the cursor
+  **block-max WAND** (R4 + C4 in SURVEY.md §2) — the reference has no
+  early termination at all (full sort, ``app/InvertedIndex.py:384``);
 - a *distributed path* for hot terms / huge df: decode chunks in
   executors via ``mapInPandas``, explode score contributions, one
   ``groupBy(doc_id)`` shuffle, ``orderBy().limit(k)`` (Spark plans
@@ -42,9 +45,6 @@ from pyfusedb_spark.layout import (
 )
 from pyfusedb_spark.oracle import bm25_idf, tfidf_weight
 
-class _BmxBail(Exception):
-    """Internal: bmx hit a non-dense doc id — fall back to exhaustive."""
-
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -52,6 +52,130 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
+
+
+class TermPostings:
+    """One term's postings, decoded once and kept score-ready on the
+    driver (the entry type of ``FuseIndex._chunk_cache``).
+
+    The term's chunks are concatenated in bucket order, which is doc
+    order (layout.py). ``partials`` are the BM25 doc-side factors for the
+    handle's ``avgdl/k1/b``, so an entry is only valid for the stats it
+    was built with. Block ``i`` covers postings
+    ``blk_start[i]:blk_start[i + 1]`` (a block never spans two chunks);
+    ``blk_first/blk_last/blk_max`` are its doc range and max partial.
+    ``nbytes`` is what the cache budget charges. Every search shares the
+    cached arrays, so they are read-only."""
+
+    __slots__ = ("docs", "tfs", "partials", "blk_start", "blk_first",
+                 "blk_last", "blk_max", "max_partial", "nbytes")
+
+    def __init__(self, docs, tfs, partials, blk_start, blk_first, blk_last,
+                 blk_max, max_partial: float):
+        self.docs, self.tfs, self.partials = docs, tfs, partials
+        self.blk_start, self.blk_first, self.blk_last = blk_start, blk_first, blk_last
+        self.blk_max = blk_max
+        self.max_partial = max_partial
+        arrays = (docs, tfs, partials, blk_start, blk_first, blk_last, blk_max)
+        for a in arrays:
+            a.flags.writeable = False
+        self.nbytes = 1024 + sum(a.nbytes for a in arrays)
+
+    @classmethod
+    def from_chunks(cls, rows: pd.DataFrame, block_size: int, avgdl: float,
+                    k1: float, b: float) -> "TermPostings":
+        """Decode one term's chunk rows (sorted by bucket)."""
+        d_parts, t_parts, l_parts, starts = [], [], [], []
+        base = 0
+        for payload, n in zip(rows["payload"], rows["df_chunk"]):
+            n = int(n)
+            d, t, l = codec.decode_postings(payload, n)
+            d_parts.append(d)
+            t_parts.append(t)
+            l_parts.append(l)
+            starts.append(np.arange(base, base + n, block_size, dtype=np.int64))
+            base += n
+
+        def cat(parts, dtype):
+            return np.concatenate(parts).astype(dtype, copy=False) if parts else np.zeros(0, dtype)
+
+        tfs = cat(t_parts, np.int32)
+        return cls(
+            docs=cat(d_parts, np.int64),
+            tfs=tfs,
+            partials=codec.bm25_partials(tfs, cat(l_parts, np.int64), avgdl, k1, b),
+            blk_start=np.append(cat(starts, np.int64), base),
+            blk_first=cat([np.asarray(x, dtype=np.int64) for x in rows["block_first"]], np.int64),
+            blk_last=cat([np.asarray(x, dtype=np.int64) for x in rows["block_last"]], np.int64),
+            blk_max=cat([np.asarray(x, dtype=np.float64) for x in rows["block_max_partial"]],
+                        np.float64),
+            max_partial=float(rows["max_partial"].max()) if len(rows) else 0.0,
+        )
+
+    def block_postings(self, blocks: np.ndarray) -> np.ndarray:
+        """Posting indices of the given (sorted) block indices."""
+        lo = self.blk_start[blocks]
+        lens = self.blk_start[blocks + 1] - lo
+        shift = np.repeat(lo - (np.cumsum(lens) - lens), lens)
+        return np.arange(shift.size, dtype=np.int64) + shift
+
+
+_EMPTY = np.zeros(0, dtype=np.int64)
+_NO_POSTINGS = TermPostings(  # a term whose chunks are all invisible
+    _EMPTY, _EMPTY.astype(np.int32), _EMPTY.astype(np.float64), np.zeros(1, np.int64),
+    _EMPTY, _EMPTY, _EMPTY.astype(np.float64), 0.0,
+)
+
+
+class _NormsCache:
+    """doc_id -> TF-IDF L2 norm, FIFO-evicted to a byte budget.
+
+    Three parallel arrays sorted by doc id (id, norm, insertion
+    sequence), so membership and gather are one ``searchsorted`` and
+    ``nbytes`` is exactly what the budget counts."""
+
+    ENTRY_BYTES = 24  # int64 id + float64 norm + int64 sequence
+
+    def __init__(self):
+        self.clear()
+
+    def clear(self) -> None:
+        self.ids = np.zeros(0, dtype=np.int64)
+        self.vals = np.zeros(0, dtype=np.float64)
+        self.seq = np.zeros(0, dtype=np.int64)
+        self._next = 0
+
+    def __len__(self) -> int:
+        return self.ids.size
+
+    @property
+    def nbytes(self) -> int:
+        return self.ids.nbytes + self.vals.nbytes + self.seq.nbytes
+
+    def lookup(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(norms, found): cached norms aligned to ``ids``, 1.0 where
+        ``found`` is False."""
+        if not self.ids.size:
+            return np.ones(ids.size, dtype=np.float64), np.zeros(ids.size, dtype=bool)
+        pos = np.minimum(np.searchsorted(self.ids, ids), self.ids.size - 1)
+        found = self.ids[pos] == ids
+        return np.where(found, self.vals[pos], 1.0), found
+
+    def insert(self, ids: np.ndarray, vals: np.ndarray) -> None:
+        """Add sorted, unique ids that are not cached yet."""
+        pos = np.searchsorted(self.ids, ids)
+        self.ids = np.insert(self.ids, pos, ids)
+        self.vals = np.insert(self.vals, pos, vals)
+        self.seq = np.insert(self.seq, pos, np.arange(self._next, self._next + ids.size))
+        self._next += ids.size
+
+    def evict(self, budget: int) -> None:
+        """Drop the oldest-inserted entries until ``nbytes <= budget``."""
+        over = self.ids.size - budget // self.ENTRY_BYTES
+        if over <= 0:
+            return
+        keep = self.seq > np.partition(self.seq, over - 1)[over - 1]
+        self.ids, self.vals, self.seq = self.ids[keep], self.vals[keep], self.seq[keep]
 
 
 class FuseIndex:
@@ -91,15 +215,19 @@ class FuseIndex:
         # one cosine query — O(n_docs) memory, a non-starter at 10^12
         # docs. Now only the current query's candidates are fetched
         # (pyarrow pushdown, mirroring _fetch_chunks) and kept warm.
-        self._norms_cache: dict[int, float] = {}
-        self._norms_cache_max = 4_000_000  # ~32 MB of float64 entries
-        # driver-side LRU of fetched chunk rows: hot terms (`return`,
-        # `def`) re-fetch multi-MB payload cells on every query without
-        # it — the posting-cache tier any real engine keeps in memory.
-        # Invalidated with the rest on stats.json change.
-        self._chunk_cache: dict[str, pd.DataFrame] = {}
+        self._norms_cache = _NormsCache()
+        self._norms_cache_budget = 32 << 20  # bytes of the cache's arrays
+        # driver-side LRU of decoded, score-ready postings per term: a
+        # warm search (hot terms like `return`, `def`) reads these arrays
+        # instead of refetching multi-MB payloads and decoding them
+        # again — the posting-cache tier any real engine keeps in
+        # memory. The budget counts decoded bytes (TermPostings.nbytes).
+        # Dropped with the rest on stats.json change: entries hold BM25
+        # partials computed with this avgdl.
+        self._chunk_cache: dict[str, TermPostings] = {}
         self._chunk_cache_bytes = 0
         self._chunk_cache_budget = 256 << 20
+        self._fetch_counts: dict[str, int] = {}
 
     def _refresh_if_stale(self) -> None:
         """Drop driver-side caches when stats.json changed underneath us.
@@ -246,50 +374,53 @@ class FuseIndex:
             return self._sum_df([r["term"] for r in rows], [r["df"] for r in rows])
 
     _CHUNK_COLS = (
-        "term", "bucket", "df_chunk", "payload", "block_offsets",
+        "term", "bucket", "df_chunk", "payload",
         "block_first", "block_last", "block_max_partial", "max_partial",
     )
 
-    def _fetch_chunks(self, terms: list[str]) -> pd.DataFrame:
-        """Fetch the ≤|q| posting chunk rows for the driver scorer.
+    def _fetch_chunks(self, terms: list[str]) -> dict[str, TermPostings]:
+        """Decoded postings of ``terms`` for the driver scorers.
 
-        Reads the term-RANGE-partitioned index parquet directly through
-        pyarrow.dataset — no per-query Spark job scheduling (this path
-        IS the driver; the executor path is ``search_distributed``).
-        Files cover disjoint term ranges (build uses repartitionByRange)
-        so file-level min/max stats prune to ~1-2 files and row-group
-        stats prune within them. Spark-scan fallback for filesystems
-        pyarrow cannot reach. Fetched rows land in a budgeted driver
-        cache keyed by term (hot-term payloads are multi-MB; refetching
-        them dominated hot-query latency)."""
-        cached = [t for t in terms if t in self._chunk_cache]
-        missing = [t for t in terms if t not in self._chunk_cache]
-        for t in cached:  # LRU touch (dict preserves insertion order)
-            self._chunk_cache[t] = self._chunk_cache.pop(t)
-        if not missing:
-            return (
-                pd.concat([self._chunk_cache[t] for t in cached], ignore_index=True)
-                .sort_values(["term", "bucket"], kind="mergesort")
-                .reset_index(drop=True)
-            )
-        cached_frames = [self._chunk_cache[t] for t in cached]  # pre-eviction snapshot
-        fetched = self._fetch_chunks_uncached(missing)
-        for t, grp in fetched.groupby("term", sort=False):
-            nbytes = int(grp["payload"].map(len).sum()) + 1024
-            if nbytes > self._chunk_cache_budget:
-                continue  # single term larger than the whole budget
-            while self._chunk_cache_bytes + nbytes > self._chunk_cache_budget:
-                old_t = next(iter(self._chunk_cache))  # least-recently used
-                old = self._chunk_cache.pop(old_t)
-                self._chunk_cache_bytes -= int(old["payload"].map(len).sum()) + 1024
-            self._chunk_cache[t] = grp.reset_index(drop=True)
-            self._chunk_cache_bytes += nbytes
-        parts = cached_frames + [fetched]
-        return (
-            pd.concat(parts, ignore_index=True)
-            .sort_values(["term", "bucket"], kind="mergesort")
-            .reset_index(drop=True)
-        )
+        Terms already in the driver LRU (``_chunk_cache``) cost a dict
+        lookup. The rest are fetched by ``_fetch_chunks_uncached`` and
+        decoded here, once, into :class:`TermPostings` entries that the
+        cache keeps under its byte budget. Hit/miss/decoded counts land
+        in ``_fetch_counts`` for ``last_search_stats``."""
+        cache = self._chunk_cache
+        out: dict[str, TermPostings] = {}
+        for t in terms:
+            entry = cache.pop(t, None)
+            if entry is not None:
+                cache[t] = entry  # LRU touch (dict keeps insertion order)
+                out[t] = entry
+        missing = [t for t in terms if t not in out]
+        decoded = 0
+        if missing:
+            fetched = self._fetch_chunks_uncached(missing)
+            for t, rows in fetched.groupby("term", sort=False):
+                entry = TermPostings.from_chunks(
+                    rows, self.block_size, self.avgdl, self.k1, self.b
+                )
+                decoded += entry.docs.size
+                out[t] = entry
+                self._cache_put(t, entry)
+            for t in missing:
+                out.setdefault(t, _NO_POSTINGS)
+        self._fetch_counts = {
+            "chunk_cache_hits": len(terms) - len(missing),
+            "chunk_cache_misses": len(missing),
+            "decoded_postings": decoded,
+        }
+        return out
+
+    def _cache_put(self, term: str, entry: TermPostings) -> None:
+        if entry.nbytes > self._chunk_cache_budget:
+            return  # single term larger than the whole budget
+        while self._chunk_cache_bytes + entry.nbytes > self._chunk_cache_budget:
+            old = self._chunk_cache.pop(next(iter(self._chunk_cache)))  # least recent
+            self._chunk_cache_bytes -= old.nbytes
+        self._chunk_cache[term] = entry
+        self._chunk_cache_bytes += entry.nbytes
 
     def _tpart_filter_vals(self, terms: list[str]) -> list[int] | None:
         """Hash-partition ids covering `terms` for a tpart-layout index
@@ -348,6 +479,15 @@ class FuseIndex:
         return flt
 
     def _fetch_chunks_uncached(self, terms: list[str]) -> pd.DataFrame:
+        """Chunk rows of ``terms``, sorted by (term, bucket).
+
+        Reads the term-RANGE-partitioned index parquet directly through
+        pyarrow.dataset — no per-query Spark job scheduling (this path
+        IS the driver; the executor path is ``search_distributed``).
+        Files cover disjoint term ranges (build uses repartitionByRange)
+        so file-level min/max stats prune to ~1-2 files and row-group
+        stats prune within them. Spark-scan fallback for filesystems
+        pyarrow cannot reach."""
         tparts = self._tpart_filter_vals(terms)
         try:
             import pyarrow.compute as pc
@@ -419,33 +559,24 @@ class FuseIndex:
         previous full toPandas() was O(n_docs) per index)."""
         ids64 = np.asarray(ids, dtype=np.int64)
         cache = self._norms_cache
-        miss = [int(d) for d in ids64 if int(d) not in cache]
-        if miss:
-            pdf = self._fetch_norm_rows(np.asarray(miss, dtype=np.int64))
-            fetched = dict(
-                zip(
-                    pdf["doc_id"].to_numpy(dtype=np.int64).tolist(),
-                    pdf["norm"].to_numpy(dtype=np.float64).tolist(),
-                )
-            )
-            for d in miss:  # absent ids cache as 1.0 (never refetch)
-                v = fetched.get(d, 1.0)
-                cache[d] = 1.0 if (v == 0 or math.isnan(v)) else float(v)
-        out = np.fromiter(
-            (cache.get(int(d), 1.0) for d in ids64),
-            dtype=np.float64,
-            count=len(ids64),
-        )
+        out, found = cache.lookup(ids64)
+        if not found.all():
+            miss = np.unique(ids64[~found])
+            pdf = self._fetch_norm_rows(miss)
+            got_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+            got = pdf["norm"].to_numpy(dtype=np.float64)
+            vals = np.ones(miss.size, dtype=np.float64)  # absent ids cache as 1.0
+            pos = np.minimum(np.searchsorted(miss, got_ids), miss.size - 1)
+            hit = miss[pos] == got_ids
+            vals[pos[hit]] = got[hit]
+            vals[(vals == 0) | np.isnan(vals)] = 1.0
+            out[~found] = vals[np.searchsorted(miss, ids64[~found])]
+            cache.insert(miss, vals)
         # evict AFTER gathering: a query whose candidate set mixes old
         # cached ids with enough fresh misses could otherwise evict its
         # OWN old ids before the read-back and silently score them with
         # the 1.0 fallback (r5 review finding)
-        over = len(cache) - self._norms_cache_max
-        if over > 0:  # bulk FIFO eviction (oldest inserted first)
-            import itertools
-
-            for k in list(itertools.islice(iter(cache), over)):
-                del cache[k]
+        cache.evict(self._norms_cache_budget)
         return out
 
     # -- public search API ----------------------------------------------------
@@ -459,19 +590,20 @@ class FuseIndex:
     ) -> list[tuple[int, float]]:
         """Driver fast path. Returns [(doc_id, score)] in (-score, doc_id) order.
 
-        ``use_wand="auto"`` routes by measured decode economics: the
-        numpy-vectorized exhaustive scorer streams ~20M postings/s while
-        the cursor loop scores ~0.25M/s plus a 128-posting block decode
-        per skip target — so WAND only wins when it touches a tiny
-        fraction of the postings. Estimated touched postings ≈
-        min_df x n_terms x block_size (every candidate doc drags each
-        hot cursor into a fresh block); engage WAND iff that, times the
-        ~25x per-posting speed gap, still undercuts total_df. On
-        corpora whose hottest term spans most documents (this synth
-        corpus, most code corpora) the selector correctly stays
-        exhaustive at any tested size — BENCH records both forced paths
-        proving the choice. Both paths are rank-identical (tests force
-        each)."""
+        Every scorer reads the same decoded, cached postings
+        (:class:`TermPostings` from ``_fetch_chunks``), so a warm search
+        decodes nothing and routing weighs scoring work alone.
+        ``use_wand="auto"`` picks the vectorized block-max scorer
+        ("bmx") when a hot/rare df split lets it leave most hot blocks
+        unscored, and the vectorized exhaustive scorer (one bincount
+        over every posting) otherwise. The cursor-loop WAND takes one
+        Python step per posting it visits (~25x slower per posting than
+        the numpy scorers), so it is never auto-picked; it stays as the
+        reference algorithm the forced-path tests compare against. All
+        paths are rank-identical (tests force each).
+        ``last_search_stats`` records the path, its pruning counts and
+        the fetch's ``chunk_cache_hits``, ``chunk_cache_misses`` and
+        ``decoded_postings``."""
         self._refresh_if_stale()
         q_tfs = self._query_terms(query)
         if not q_tfs:
@@ -483,6 +615,22 @@ class FuseIndex:
         if conjunctive and len(terms) < len(q_tfs):
             return []  # some query term matches nothing
         chunks = self._fetch_chunks(terms)
+        out = self._score(chunks, terms, q_tfs, dfs, top_k, mode, conjunctive, use_wand)
+        self.last_search_stats.update(self._fetch_counts)
+        return out
+
+    def _score(
+        self,
+        chunks: dict[str, TermPostings],
+        terms: list[str],
+        q_tfs: dict[str, int],
+        dfs: dict[str, int],
+        top_k: int,
+        mode: str,
+        conjunctive: bool,
+        use_wand: bool | str,
+    ) -> list[tuple[int, float]]:
+        """Route to one scorer; it or this sets ``last_search_stats``."""
         # wand_safe gates EVERY block-max-pruned path (auto-bmx, forced
         # bmx, cursor WAND): incremental appends that drift avgdl past
         # tolerance make the stored block-max bounds stale upper bounds,
@@ -491,12 +639,6 @@ class FuseIndex:
         bounds_safe = self.stats.get("wand_safe") is not False
         if use_wand == "auto":
             df_vals = [dfs[t] for t in terms]
-            # vectorized block-max (bmx) when there is a hot/rare split
-            # worth skipping on; plain vectorized exhaustive otherwise.
-            # The cursor-loop WAND is never auto-picked (measured ~25x
-            # slower per posting than the vectorized paths; kept for the
-            # forced-path oracle equivalence and as the reference
-            # algorithm).
             hot_cut = self._hot_cut(df_vals, top_k)
             rare_total = sum(v for v in df_vals if v <= hot_cut)
             hot_total = sum(v for v in df_vals if v > hot_cut)
@@ -509,8 +651,8 @@ class FuseIndex:
                 and max(df_vals) >= 16 * min(df_vals)
                 # engage only when candidate coverage still skips >=75%
                 # of the hot blocks (rare candidates ~ one block touch
-                # each); below that the run-batched decode approaches a
-                # full scan and plain exhaustive wins
+                # each); below that the block gathers approach a full
+                # scan and plain exhaustive wins
                 and 4 * rare_total * self.block_size < hot_total
             ):
                 out = self._blockmax_vectorized(chunks, terms, q_tfs, dfs, top_k)
@@ -523,30 +665,24 @@ class FuseIndex:
             out = self._blockmax_vectorized(chunks, terms, q_tfs, dfs, top_k)
             if out is not None:
                 return out
-            out = self._exhaustive(chunks, terms, q_tfs, dfs, top_k, mode, conjunctive)
-            self.last_search_stats = {
-                "path": "exhaustive",  # bmx declined this shape
-                "postings_total": int(sum(dfs[t] for t in terms)),
-            }
-            return out
-        if mode == "bm25" and use_wand and not conjunctive:
-            cursors = []
-            for term in terms:
-                sub = chunks[chunks["term"] == term]
-                qw = float(q_tfs[term]) * bm25_idf(dfs[term], self.n_docs)
-                cursors.append(TermCursor(sub, qw, self.k1, self.b, self.avgdl, self.block_size))
+            # bmx declined this shape: fall through to exhaustive
+        elif mode == "bm25" and use_wand and not conjunctive:
+            cursors = [
+                TermCursor(chunks[t], float(q_tfs[t]) * bm25_idf(dfs[t], self.n_docs))
+                for t in terms
+            ]
             out = wand_topk(cursors, top_k)
             total_blocks = sum(c.n_blocks for c in cursors)
-            decoded = sum(c.blocks_decoded for c in cursors)
+            scored = sum(c.blocks_scored for c in cursors)
             self.last_search_stats = {
                 "path": "wand",
-                "postings_total": sum(c.df_total for c in cursors),
+                "postings_total": sum(c.docs.size for c in cursors),
                 "blocks_total": total_blocks,
-                "blocks_decoded": decoded,
-                "blocks_skipped": total_blocks - decoded,
-                # decoded blocks hold <= block_size postings each: upper
+                "blocks_scored": scored,
+                "blocks_skipped": total_blocks - scored,
+                # scored blocks hold <= block_size postings each: upper
                 # bound on postings actually examined
-                "postings_touched_max": decoded * self.block_size,
+                "postings_touched_max": scored * self.block_size,
             }
             return out
         out = self._exhaustive(chunks, terms, q_tfs, dfs, top_k, mode, conjunctive)
@@ -565,7 +701,7 @@ class FuseIndex:
 
     def _blockmax_vectorized(
         self,
-        chunks: pd.DataFrame,
+        chunks: dict[str, TermPostings],
         terms: list[str],
         q_tfs: dict[str, int],
         dfs: dict[str, int],
@@ -573,129 +709,101 @@ class FuseIndex:
     ) -> list[tuple[int, float]] | None:
         """Exact BM25 top-k with VECTORIZED block-max skipping ("bmx").
 
-        The cursor-loop WAND (wand_topk) scores ~0.25M postings/s in
-        Python, so it loses to the ~20M postings/s exhaustive scorer
-        unless it skips ~everything. This scorer keeps the skipping but
-        stays numpy-vectorized end to end:
+        The cursor-loop WAND (wand_topk) takes one Python step per
+        posting, so it loses to the exhaustive bincount unless it skips
+        ~everything. This scorer keeps the skipping but stays
+        numpy-vectorized end to end over the cached postings:
 
-          A. decode RARE terms (df <= hot cutoff) fully, dense-accumulate
-             -> theta_lb = k-th best rare-only score (a lower bound on
-             the final threshold, since scores only grow);
+          A. add RARE terms (df <= hot cutoff) fully into a dense
+             accumulator -> theta_lb = k-th best rare-only score (a
+             lower bound on the final threshold, since scores only
+             grow);
           B. for each HOT term, select blocks where
              qw*block_max + sum(other hot terms' global UB) >= theta_lb
              (any doc wholly inside skipped blocks and with no rare term
              is provably below theta_lb <= theta_final, so dropping it is
-             lossless); decode them, collect their docs into the
-             candidate set;
-          C. cover pass: decode, per hot term, every block containing a
-             candidate doc (binary search over block [first,last]
-             ranges) so every candidate's score is COMPLETE;
-          D. one bincount + argpartition top-k with (-score, doc_id)
-             ties, identical to the exhaustive scorer.
+             lossless); add their postings (one gather over the blocks'
+             posting ranges) and collect their docs into the candidate
+             set;
+          C. cover pass: add, per hot term, every not-yet-added block
+             containing a candidate doc (binary search over block
+             [first,last] ranges) so every candidate's score is COMPLETE;
+          D. one argpartition top-k with (-score, doc_id) ties,
+             identical to the exhaustive scorer.
 
-        Docs never decoded have provable score < theta_lb <= theta_final
+        Docs never added have provable score < theta_lb <= theta_final
         and cannot enter (or tie into) the top-k — rank-identity with
         the exhaustive path is asserted in tests across forced paths.
-        Returns None when every term is hot or ids are non-dense
-        (caller falls back to exhaustive)."""
+        Returns None when every term is hot, none is, or ids are
+        non-dense (caller falls back to exhaustive)."""
         df_vals = np.array([dfs[t] for t in terms], dtype=np.int64)
         hot_cut = self._hot_cut(df_vals.tolist(), top_k)
         hot_mask = df_vals > hot_cut
         if not hot_mask.any() or hot_mask.all():
             return None
         dense_n = self._dense_id_bound()
-        if dense_n > (1 << 26):
+        if dense_n > (1 << 26) or any(
+            chunks[t].blk_last.size and int(chunks[t].blk_last.max()) >= dense_n
+            for t in terms
+        ):
             return None
         sums = np.zeros(dense_n, dtype=np.float64)
         covered = np.zeros(dense_n, dtype=bool)
-        hot_rows: list[tuple[str, float, pd.DataFrame]] = []
-        # --- A: rare terms decoded fully ---
+        hot: list[tuple[TermPostings, float]] = []
+        # --- A: rare terms added fully ---
         for term, is_hot in zip(terms, hot_mask):
-            sub = chunks[chunks["term"] == term]
+            p = chunks[term]
             qw = float(q_tfs[term]) * bm25_idf(dfs[term], self.n_docs)
             if is_hot:
-                hot_rows.append((term, qw, sub))
+                hot.append((p, qw))
                 continue
-            for row in sub.itertuples(index=False):
-                d, t, l = codec.decode_postings(bytes(row.payload), int(row.df_chunk))
-                if d.size and int(d.max()) >= dense_n:
-                    return None
-                sums[d] += qw * codec.bm25_partials(t, l, self.avgdl, self.k1, self.b)
-                covered[d] = True
+            sums[p.docs] += qw * p.partials
+            covered[p.docs] = True
         cand = np.flatnonzero(covered)
         if cand.size >= top_k:
             theta_lb = float(np.partition(sums[cand], cand.size - top_k)[cand.size - top_k])
         else:
             theta_lb = -math.inf
-        hot_ub = {term: qw * float(sub["max_partial"].max() if len(sub) else 0.0)
-                  for term, qw, sub in hot_rows}
+        hot_ub = [qw * p.max_partial for p, qw in hot]
+
+        def add_blocks(p: TermPostings, qw: float, blocks: np.ndarray) -> np.ndarray:
+            idx = p.block_postings(blocks)
+            d = p.docs[idx]
+            sums[d] += qw * p.partials[idx]
+            return d
+
+        # --- B: high-UB hot blocks (could beat theta on their own) ---
         blocks_total = 0
-        blocks_decoded = 0
-
-        def _decode_runs(row, qw, want: np.ndarray) -> np.ndarray:
-            """Decode sorted block indices of one chunk row, batching
-            CONSECUTIVE blocks into single varint passes (gaps continue
-            across block boundaries, so a run decodes at full speed —
-            per-block calls made bmx slower than exhaustive). Returns
-            the decoded docs."""
-            nonlocal blocks_decoded
-            offsets = np.asarray(row.block_offsets, dtype=np.int64)
-            last = np.asarray(row.block_last, dtype=np.int64)
-            payload = bytes(row.payload)
-            npost = int(row.df_chunk)
-            cuts = np.flatnonzero(np.diff(want) > 1) + 1
-            docs_out = []
-            for seg in np.split(want, cuts):
-                a, bnd = int(seg[0]), int(seg[-1])
-                prev_last = int(last[a - 1]) if a > 0 else None
-                d, t, l = codec.decode_block_run(
-                    payload, offsets, a, bnd, npost, self.block_size, prev_last
-                )
-                if d.size and int(d.max()) >= dense_n:
-                    raise _BmxBail()
-                sums[d] += qw * codec.bm25_partials(t, l, self.avgdl, self.k1, self.b)
-                docs_out.append(d)
-            blocks_decoded += len(want)
-            return np.concatenate(docs_out) if docs_out else np.zeros(0, np.int64)
-
-        try:
-            # --- B: high-UB hot blocks (could beat theta on their own) ---
-            ub_want: dict[tuple[str, int], np.ndarray] = {}
-            new_docs = []
-            for term, qw, sub in hot_rows:
-                other_ub = sum(v for k2, v in hot_ub.items() if k2 != term)
-                for ci, row in enumerate(sub.itertuples(index=False)):
-                    bmax = np.asarray(row.block_max_partial, dtype=np.float64)
-                    blocks_total += len(bmax)
-                    want = np.flatnonzero(qw * bmax + other_ub >= theta_lb)
-                    ub_want[(term, ci)] = want
-                    if want.size:
-                        new_docs.append(_decode_runs(row, qw, want))
-            if new_docs:
-                nd = np.concatenate(new_docs)
-                covered[nd] = True
-                cand = np.flatnonzero(covered)
-            # --- C: cover pass — complete every candidate's score ---
-            cand_sorted = cand  # flatnonzero is sorted
-            for term, qw, sub in hot_rows:
-                for ci, row in enumerate(sub.itertuples(index=False)):
-                    first = np.asarray(row.block_first, dtype=np.int64)
-                    last = np.asarray(row.block_last, dtype=np.int64)
-                    lo = np.searchsorted(cand_sorted, first, side="left")
-                    hi = np.searchsorted(cand_sorted, last, side="right")
-                    need = hi > lo
-                    need[ub_want[(term, ci)]] = False  # already decoded in B
-                    want = np.flatnonzero(need)
-                    if want.size:
-                        _decode_runs(row, qw, want)
-        except _BmxBail:
-            return None
+        blocks_scored = 0
+        ub_want = []
+        new_docs = []
+        for i, (p, qw) in enumerate(hot):
+            other_ub = sum(v for j, v in enumerate(hot_ub) if j != i)
+            want = np.flatnonzero(qw * p.blk_max + other_ub >= theta_lb)
+            blocks_total += p.blk_max.size
+            blocks_scored += want.size
+            ub_want.append(want)
+            if want.size:
+                new_docs.append(add_blocks(p, qw, want))
+        if new_docs:
+            covered[np.concatenate(new_docs)] = True
+            cand = np.flatnonzero(covered)  # sorted
+        # --- C: cover pass — complete every candidate's score ---
+        for (p, qw), done in zip(hot, ub_want):
+            lo = np.searchsorted(cand, p.blk_first, side="left")
+            hi = np.searchsorted(cand, p.blk_last, side="right")
+            need = hi > lo
+            need[done] = False  # already added in B
+            want = np.flatnonzero(need)
+            if want.size:
+                add_blocks(p, qw, want)
+                blocks_scored += want.size
         self.last_search_stats = {
             "path": "bmx",
             "postings_total": int(sum(dfs[t] for t in terms)),
             "hot_blocks_total": int(blocks_total),
-            "hot_blocks_decoded": int(blocks_decoded),
-            "hot_blocks_skipped": int(blocks_total - blocks_decoded),
+            "hot_blocks_scored": int(blocks_scored),
+            "hot_blocks_skipped": int(blocks_total - blocks_scored),
         }
         if cand.size == 0:
             return []
@@ -709,7 +817,7 @@ class FuseIndex:
 
     def _exhaustive(
         self,
-        chunks: pd.DataFrame,
+        chunks: dict[str, TermPostings],
         terms: list[str],
         q_tfs: dict[str, int],
         dfs: dict[str, int],
@@ -720,28 +828,19 @@ class FuseIndex:
         ids_all, contrib_all = [], []
         q_sq = 0.0
         for term in terms:
-            sub = chunks[chunks["term"] == term]
-            d_parts, t_parts, l_parts = [], [], []
-            for row in sub.itertuples(index=False):
-                d, t, l = codec.decode_postings(bytes(row.payload), int(row.df_chunk))
-                d_parts.append(d)
-                t_parts.append(t)
-                l_parts.append(l)
-            if not d_parts:
+            p = chunks[term]
+            if not p.docs.size:
                 continue
-            d = np.concatenate(d_parts)
-            t = np.concatenate(t_parts)
-            l = np.concatenate(l_parts)
             if mode == "bm25":
                 qw = float(q_tfs[term]) * bm25_idf(dfs[term], self.n_docs)
-                contrib = qw * codec.bm25_partials(t, l, self.avgdl, self.k1, self.b)
+                contrib = qw * p.partials
             else:
                 w_tq = tfidf_weight(q_tfs[term], dfs[term], self.n_docs)
                 q_sq += w_tq * w_tq
                 idf10 = math.log10(self.n_docs / dfs[term])
-                w_td = (1.0 + np.log10(t.astype(np.float64))) * idf10
+                w_td = (1.0 + np.log10(p.tfs.astype(np.float64))) * idf10
                 contrib = w_td * w_tq
-            ids_all.append(d)
+            ids_all.append(p.docs)
             contrib_all.append(contrib)
         if not ids_all:
             return []
@@ -882,45 +981,25 @@ class FuseIndex:
 # --------------------------------------------------------------------------
 
 class TermCursor:
-    """Cursor over one term's doc-ordered chunk sequence with lazy
-    per-block decoding (C4 block-max metadata from the codec)."""
+    """Cursor over one term's cached :class:`TermPostings`, moving block
+    by block with the C4 block-max metadata."""
 
     __slots__ = (
-        "qw", "k1", "b", "avgdl", "block_size", "chunks", "flat_last",
-        "flat_first", "flat_max", "flat_chunk", "flat_local", "n_blocks",
-        "blk", "idx", "cur_doc", "_docs", "_tfs", "_dls", "max_score",
-        "blocks_decoded", "df_total",
+        "qw", "docs", "partials", "blk_start", "blk_last", "blk_max",
+        "n_blocks", "blk", "idx", "end", "cur_doc", "max_score",
+        "blocks_scored",
     )
 
-    def __init__(self, chunk_rows: pd.DataFrame, qw: float, k1: float, b: float, avgdl: float, block_size: int):
+    def __init__(self, postings: TermPostings, qw: float):
         self.qw = qw
-        self.k1, self.b, self.avgdl, self.block_size = k1, b, avgdl, block_size
-        self.chunks = []  # (payload, offsets, n_postings)
-        flat_last, flat_first, flat_max, flat_chunk, flat_local = [], [], [], [], []
-        for ci, row in enumerate(chunk_rows.itertuples(index=False)):
-            offsets = np.asarray(row.block_offsets, dtype=np.int64)
-            self.chunks.append((bytes(row.payload), offsets, int(row.df_chunk)))
-            last = np.asarray(row.block_last, dtype=np.int64)
-            first = np.asarray(row.block_first, dtype=np.int64)
-            bmax = np.asarray(row.block_max_partial, dtype=np.float64)
-            flat_last.append(last)
-            flat_first.append(first)
-            flat_max.append(bmax)
-            flat_chunk.append(np.full(len(last), ci, dtype=np.int64))
-            flat_local.append(np.arange(len(last), dtype=np.int64))
-        self.flat_last = np.concatenate(flat_last) if flat_last else np.zeros(0, np.int64)
-        self.flat_first = np.concatenate(flat_first) if flat_first else np.zeros(0, np.int64)
-        self.flat_max = np.concatenate(flat_max) if flat_max else np.zeros(0, np.float64)
-        self.flat_chunk = np.concatenate(flat_chunk) if flat_chunk else np.zeros(0, np.int64)
-        self.flat_local = np.concatenate(flat_local) if flat_local else np.zeros(0, np.int64)
-        self.n_blocks = len(self.flat_last)
-        self.max_score = qw * float(self.flat_max.max()) if self.n_blocks else 0.0
-        self.blocks_decoded = 0
-        self.df_total = int(sum(c[2] for c in self.chunks))
+        self.docs, self.partials = postings.docs, postings.partials
+        self.blk_start, self.blk_last = postings.blk_start, postings.blk_last
+        self.blk_max = postings.blk_max
+        self.n_blocks = len(self.blk_last)
+        self.max_score = qw * float(self.blk_max.max()) if self.n_blocks else 0.0
+        self.blocks_scored = 0
         self.blk = -1
-        self.idx = 0
-        self._docs = self._tfs = self._dls = None
-        self.cur_doc = -1
+        self.idx = self.end = 0
         if self.n_blocks:
             self._load_block(0)
         else:
@@ -928,38 +1007,25 @@ class TermCursor:
 
     def _load_block(self, blk: int) -> None:
         self.blk = blk
-        self.blocks_decoded += 1
-        ci = int(self.flat_chunk[blk])
-        lj = int(self.flat_local[blk])
-        payload, offsets, n_postings = self.chunks[ci]
-        prev_last = None
-        if lj > 0:
-            # previous block within the same chunk
-            prev_last = int(self.flat_last[blk - 1])
-        d, t, l = codec.decode_block(
-            payload, offsets, lj, n_postings, self.block_size, prev_last
-        )
-        self._docs, self._tfs, self._dls = d, t, l
-        self.idx = 0
-        self.cur_doc = int(d[0])
+        self.blocks_scored += 1
+        self.idx = int(self.blk_start[blk])
+        self.end = int(self.blk_start[blk + 1])
+        self.cur_doc = int(self.docs[self.idx])
 
     def block_upper_bound(self) -> float:
-        return self.qw * float(self.flat_max[self.blk])
+        return self.qw * float(self.blk_max[self.blk])
 
     def current_block_last(self) -> int:
-        return int(self.flat_last[self.blk])
+        return int(self.blk_last[self.blk])
 
     def score_current(self) -> float:
-        tf = float(self._tfs[self.idx])
-        dl = float(self._dls[self.idx])
-        denom = tf + self.k1 * (1.0 - self.b + self.b * (dl / self.avgdl if self.avgdl > 0 else 0.0))
-        return self.qw * (tf * (self.k1 + 1.0) / denom if denom > 0 else 0.0)
+        return self.qw * float(self.partials[self.idx])
 
     def advance(self) -> None:
         """Move to next posting."""
         self.idx += 1
-        if self.idx < len(self._docs):
-            self.cur_doc = int(self._docs[self.idx])
+        if self.idx < self.end:
+            self.cur_doc = int(self.docs[self.idx])
             return
         if self.blk + 1 < self.n_blocks:
             self._load_block(self.blk + 1)
@@ -970,17 +1036,17 @@ class TermCursor:
         """Galloping skip to first doc >= target using block metadata."""
         if self.cur_doc >= target:
             return
-        if self.flat_last[self.blk] < target:
-            nxt = int(np.searchsorted(self.flat_last, target, side="left"))
+        if self.blk_last[self.blk] < target:
+            nxt = int(np.searchsorted(self.blk_last, target, side="left"))
             if nxt >= self.n_blocks:
                 self.cur_doc = _INF
                 return
             self._load_block(nxt)
         # within current (possibly fresh) block
-        pos = int(np.searchsorted(self._docs[self.idx:], target, side="left")) + self.idx
-        if pos < len(self._docs):
+        pos = int(np.searchsorted(self.docs[self.idx:self.end], target, side="left")) + self.idx
+        if pos < self.end:
             self.idx = pos
-            self.cur_doc = int(self._docs[pos])
+            self.cur_doc = int(self.docs[pos])
         else:  # can only happen if target > last of final block
             self.cur_doc = _INF
 

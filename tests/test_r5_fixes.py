@@ -287,7 +287,7 @@ def test_norms_eviction_never_corrupts_current_query(spark, tmp_path):
     true = idx._fetch_norm_rows(np.arange(len(PANGRAMS), dtype=np.int64))
     truth = dict(zip(true["doc_id"].tolist(), true["norm"].tolist()))
 
-    idx._norms_cache_max = 4  # force eviction pressure
+    idx._norms_cache_budget = 4 * idx._norms_cache.ENTRY_BYTES  # force eviction pressure
     idx._norms_cache.clear()
     idx._norms_for(np.array([0], dtype=np.int64))  # id 0 = oldest entry
     # current query: old id 0 + 6 fresh misses -> eviction must not
@@ -297,6 +297,7 @@ def test_norms_eviction_never_corrupts_current_query(spark, tmp_path):
         expect = truth.get(d, 1.0)
         assert got[i] == pytest.approx(expect, abs=1e-12), (d, got[i], expect)
     assert len(idx._norms_cache) <= 4
+    assert idx._norms_cache.nbytes <= idx._norms_cache_budget
 
 
 def test_compaction_stops_at_top_level_instead_of_wedging(spark, tmp_path, monkeypatch):
@@ -367,3 +368,28 @@ def test_pretiered_index_refused_not_gcd(spark, tmp_path):
     _json.dump(st, open(f"{out}/stats.json", "w"))
     with pytest.raises(ValueError, match="pre-tiered"):
         IncrementalIndexWriter(spark, out, config=CFG)
+
+
+def test_rebuild_over_streamed_index_refused(spark, tmp_path):
+    """build_index over a root that carries streamed appends must refuse
+    loudly: its pre-wave cleanup and stats.json rewrite would otherwise
+    drop the streamed postings — with resume=False every tpart is
+    uncommitted, so every streamed bucket's tpart dirs went."""
+    out = str(tmp_path / "idx")
+    half = len(PANGRAMS) // 2
+    cfg = IndexConfig(preset="english", n_buckets=2, shuffle_partitions=4, n_tparts=2)
+    build_index(spark, _df(spark, PANGRAMS[:half]), out, doc_id_col="doc_id", config=cfg)
+    IncrementalIndexWriter(spark, out, config=cfg).process_batch(
+        _df(spark, PANGRAMS[half:], base=half), 0
+    )
+    for resume in (False, True):
+        with pytest.raises(ValueError, match="streamed"):
+            build_index(spark, _df(spark, PANGRAMS[:half]), out, doc_id_col="doc_id",
+                        config=cfg, resume=resume)
+    oracle = OracleIndex(Analyzer("english")).build(PANGRAMS)
+    idx = FuseIndex(spark, out)
+    for q in ("quick fox", "jumping wizards", "flower bloom dog"):
+        got = idx.search(q, 10)
+        expect = oracle.search_bm25(q, 10)
+        assert [d for d, _ in got] == [d for d, _ in expect], q
+        np.testing.assert_allclose([s for _, s in got], [s for _, s in expect], atol=1e-9)

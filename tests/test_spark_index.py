@@ -147,28 +147,71 @@ def test_huge_vocab_lexicon_fallback(spark, pangram_index):
         assert idx2.search(q, 5, mode="tfidf") == pangram_index.search(q, 5, mode="tfidf")
 
 
-def test_chunk_cache_hits_and_stays_correct(pangram_index):
-    """Second identical query must serve chunk rows from the driver
-    cache (no refetch) and return identical results."""
+def test_chunk_cache_hits_and_stays_correct(pangram_index, monkeypatch):
+    """A repeated search is served from the driver cache of decoded
+    postings: no refetch, zero postings decoded, and the same ranking on
+    every forced scorer path. A tiny budget evicts least-recently-used
+    terms, charged in decoded bytes, without changing ranks."""
+    from pyfusedb_spark.functions import codec
+
     idx = pangram_index
+    q = "quick fox jump wizard box flower dog cat"
     idx._chunk_cache.clear()
     idx._chunk_cache_bytes = 0
-    first = idx.search("quick fox", 10)
+    first = idx.search(q, 10)
     assert idx._chunk_cache, "fetch did not populate the chunk cache"
-    fetches = {"n": 0}
-    orig = idx._fetch_chunks_uncached
+    st = idx.last_search_stats
+    n_terms = st["chunk_cache_misses"]
+    assert n_terms > 0 and st["chunk_cache_hits"] == 0 and st["decoded_postings"] > 0
 
-    def counting(terms):
-        fetches["n"] += 1
-        return orig(terms)
+    calls = {"fetch": 0, "decode": 0}
 
-    idx._fetch_chunks_uncached = counting
-    try:
-        second = idx.search("quick fox", 10)
-    finally:
-        idx._fetch_chunks_uncached = orig
-    assert fetches["n"] == 0, "cached terms were refetched"
+    def counting(fn, key):
+        def wrapped(*a, **kw):
+            calls[key] += 1
+            return fn(*a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(
+        idx, "_fetch_chunks_uncached", counting(idx._fetch_chunks_uncached, "fetch")
+    )
+    for name in ("decode_postings", "decode_block_run", "decode_block"):
+        monkeypatch.setattr(codec, name, counting(getattr(codec, name), "decode"))
+    second = idx.search(q, 10)
+    assert idx.last_search_stats["chunk_cache_hits"] == n_terms
+    assert idx.last_search_stats["chunk_cache_misses"] == 0
+    assert idx.last_search_stats["decoded_postings"] == 0
     assert first == second
+    for use_wand in (False, "bmx", True):
+        got = idx.search(q, 10, use_wand=use_wand)
+        assert [d for d, _ in got] == [d for d, _ in first], use_wand
+        np.testing.assert_allclose([s for _, s in got], [s for _, s in first], atol=1e-12)
+    assert calls == {"fetch": 0, "decode": 0}, "cached terms were refetched or decoded"
+    monkeypatch.undo()
+
+    # the budget is charged in decoded bytes
+    assert idx._chunk_cache_bytes == sum(e.nbytes for e in idx._chunk_cache.values())
+    for e in idx._chunk_cache.values():
+        assert e.nbytes >= e.docs.nbytes + e.tfs.nbytes + e.partials.nbytes
+    # LRU order: a budget that holds any two of a, b, c but not all three
+    a, b, c = "box", "dog", "fox"
+    size = {t: idx._chunk_cache[t].nbytes for t in (a, b, c)}
+    budget = max(size[a] + size[b], size[a] + size[c], size[b] + size[c])
+    saved = idx._chunk_cache_budget
+    idx._chunk_cache.clear()
+    idx._chunk_cache_bytes = 0
+    idx._chunk_cache_budget = budget
+    try:
+        for t in (a, b, a, c):  # touching a again makes b least recent
+            idx.search(t, 10)
+            assert idx._chunk_cache_bytes <= budget
+        assert list(idx._chunk_cache) == [a, c]
+        assert idx.search(q, 10) == first
+        assert idx._chunk_cache_bytes <= budget
+    finally:
+        idx._chunk_cache_budget = saved
+        idx._chunk_cache.clear()
+        idx._chunk_cache_bytes = 0
 
 
 def test_sqlfront_limit_zero_and_negative(spark, pangram_index):

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from pyfusedb_spark.functions import codec
-from pyfusedb_spark.operators.query import TermCursor, wand_topk
+from pyfusedb_spark.operators.query import TermCursor, TermPostings, wand_topk
 from pyfusedb_spark.oracle import bm25_idf, bm25_partial
 
 K1, B = 1.2, 0.75
@@ -66,7 +66,8 @@ def test_wand_equals_exhaustive_random(seed):
         chunks, doc_ids, tfs = _make_chunks(rng, n_docs, df, avgdl, dls, block_size)
         qtf = int(rng.integers(1, 3))
         qw = qtf * bm25_idf(df, n_docs)
-        cursors.append(TermCursor(chunks, qw, K1, B, avgdl, block_size))
+        postings = TermPostings.from_chunks(chunks, block_size, avgdl, K1, B)
+        cursors.append(TermCursor(postings, qw))
         term_data.append(((doc_ids, tfs), qw))
     got = wand_topk(cursors, k)
     expect = _exhaustive(term_data, dls, avgdl, n_docs, k)
@@ -89,7 +90,7 @@ def test_wand_heavy_ties():
         block_last=ch.block_last.tolist(), block_max_partial=ch.block_max_partial.tolist(),
         max_partial=ch.max_partial)])
     qw = bm25_idf(df, n_docs)
-    got = wand_topk([TermCursor(chunks, qw, K1, B, 100.0, 16)], k)
+    got = wand_topk([TermCursor(TermPostings.from_chunks(chunks, 16, 100.0, K1, B), qw)], k)
     # ties broken by ascending doc_id -> exactly the k smallest matching ids
     assert [d for d, _ in got] == doc_ids[:k].tolist()
 
@@ -126,7 +127,7 @@ def test_bmx_equals_exhaustive_random(seed):
     avgdl = float(dls.mean())
     n_hot = int(rng.integers(1, 3))
     n_rare = int(rng.integers(1, 4))
-    chunk_rows, term_data, terms, q_tfs, dfs = [], [], [], {}, {}
+    postings, term_data, terms, q_tfs, dfs = {}, [], [], {}, {}
     for i in range(n_hot + n_rare):
         name = f"t{i}"
         df = (
@@ -135,16 +136,14 @@ def test_bmx_equals_exhaustive_random(seed):
             else int(rng.integers(1, max(2, n_docs // 50)))
         )
         chunks, doc_ids, tfs = _make_chunks(rng, n_docs, df, avgdl, dls, block_size)
-        chunks["term"] = name
         qtf = int(rng.integers(1, 3))
-        chunk_rows.append(chunks)
+        postings[name] = TermPostings.from_chunks(chunks, block_size, avgdl, K1, B)
         term_data.append(((doc_ids, tfs), qtf * bm25_idf(df, n_docs)))
         terms.append(name)
         q_tfs[name] = qtf
         dfs[name] = df
-    all_chunks = pd.concat(chunk_rows, ignore_index=True)
     stub = _BmxStub(n_docs, avgdl, block_size)
-    got = stub._blockmax_vectorized(all_chunks, terms, q_tfs, dfs, k)
+    got = stub._blockmax_vectorized(postings, terms, q_tfs, dfs, k)
     expect = _exhaustive(term_data, dls, avgdl, n_docs, k)
     if got is None:  # degenerate hot/rare split -> caller's fallback
         return
