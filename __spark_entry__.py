@@ -519,10 +519,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _search_df(spark, _index(spark, sf), "join")
 
     def ft_bm25_multi(spark, sf):
-        # use_wand=True FORCES the block-max WAND cursor path; paired
-        # with ft_bm25_exhaustive (same query, use_wand=False) both
-        # hash-match the same DuckDB oracle -> pruning == exhaustive
-        return _search_df(spark, _index(spark, sf), "merge sort join", use_wand=True)
+        # default auto-routing; ft_bm25_exhaustive and ft_bm25_bmx force
+        # each scorer on the same query, and all three hash-match the
+        # same DuckDB oracle -> pruning == exhaustive
+        return _search_df(spark, _index(spark, sf), "merge sort join")
 
     def ft_bm25_repeat(spark, sf):
         return _search_df(spark, _index(spark, sf), "merge merge sort")
@@ -531,7 +531,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _search_df(spark, _index(spark, sf), "merge sort", conjunctive=True)
 
     def ft_bm25_exhaustive(spark, sf):
-        # same result as the WAND path — proves pruning == exhaustive
+        # same result as the block-max path — proves pruning == exhaustive
         return _search_df(spark, _index(spark, sf), "merge sort join", use_wand=False)
 
     def ft_bm25_bmx(spark, sf):

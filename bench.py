@@ -109,7 +109,6 @@ def _bench_synth(spark, synth_rows: int, cpus: int, timings: dict, extras: dict)
         "noop"
     ).mode("overwrite").save()
     corpus.limit(2000).count()  # touch the corpus files too
-    # posting mode A/B knob; file-shuffle is the production default.
     # n_tparts is rows-derived, NOT cpus-derived, so the N->4N scaling
     # pair measures the same work decomposition at both parallelism
     # levels. Target ~16k docs per tpart, clamped to [16, 64]:
@@ -120,7 +119,6 @@ def _bench_synth(spark, synth_rows: int, cpus: int, timings: dict, extras: dict)
     #   ~13% more stage_tf (file fan-out) for no extra postings win.
     # - at 150k rows -> 16: 64 tparts over a small corpus is pure file
     #   fan-out overhead (A/B: build 14.5s@64 vs 4.0s@16).
-    mode = os.environ.get("BENCH_POSTING_MODE", "file-shuffle")
     n_tparts = int(
         os.environ.get("BENCH_N_TPARTS", str(max(16, min(64, synth_rows // 15_625))))
     )
@@ -135,7 +133,7 @@ def _bench_synth(spark, synth_rows: int, cpus: int, timings: dict, extras: dict)
     build_index(
         spark, corpus, sdir, doc_id_col="doc_id",
         config=IndexConfig(preset="code", n_buckets=4, compute_norms=False,
-                           shuffle_partitions=cpus, posting_mode=mode,
+                           shuffle_partitions=cpus,
                            n_tparts=n_tparts, scan_tasks=scan_tasks,
                            max_tf_files_per_tpart=max_tf_files or None),
         resume=False,
@@ -154,14 +152,12 @@ def _bench_synth(spark, synth_rows: int, cpus: int, timings: dict, extras: dict)
     extras["synth_bm25_p95_sec"] = round(lats[max(0, int(len(lats) * 0.95) - 1)], 4)
     timings["q_synth_bm25_set"] = round(sum(lats), 4)
 
-    # Scorer-path evidence on a hot+selective query: all three paths
-    # forced (cursor WAND kept as the reference algorithm; bmx = the
-    # vectorized block-max scorer that actually wins; exhaustive = the
+    # Scorer-path evidence on a hot+selective query: both paths forced
+    # (bmx = the vectorized block-max scorer; exhaustive = the
     # vectorized full scan), plus the auto-selector's pick and the skip
     # counters proving WHY the winner wins.
     from pyfusedb_spark.sources.corpus import project_vocab_sample
     wq = f"return {project_vocab_sample(42)} {project_vocab_sample(1009)}"
-    timings["q_wand_cursor"] = _med(lambda: sidx.search(wq, 10, use_wand=True), n=3)
     timings["q_bmx"] = _med(lambda: sidx.search(wq, 10, use_wand="bmx"), n=5)
     st = sidx.last_search_stats or {}
     timings["q_exhaustive_same"] = _med(lambda: sidx.search(wq, 10, use_wand=False), n=5)

@@ -37,14 +37,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--b", type=float, default=0.75)
     ap.add_argument("--no-norms", action="store_true",
                     help="skip exact TF-IDF norms (BM25-only index)")
-    ap.add_argument("--posting-mode", default="file-shuffle",
-                    choices=["file-shuffle", "per-bucket", "single-pass"],
-                    help="file-shuffle (default): zero-live-exchange tpart "
-                         "pipeline (the mode that meets the N->4N scaling "
-                         "target); per-bucket/single-pass: legacy live "
-                         "repartitionByRange exchange")
     ap.add_argument("--n-tparts", type=int, default=None,
-                    help="file-shuffle fan-out (default: corpus-derived, "
+                    help="posting-stage fan-out (default: corpus-derived, "
                          "~15625 docs per tpart capped at 4x parallelism); "
                          "keep constant across cluster sizes when measuring "
                          "scaling")
@@ -81,7 +75,6 @@ def main(argv: list[str] | None = None) -> int:
             n_buckets=args.buckets,
             compute_norms=not args.no_norms,
             shuffle_partitions=args.shuffle_partitions,
-            posting_mode=args.posting_mode,
             n_tparts=args.n_tparts,
             max_tf_files_per_tpart=args.max_tf_files_per_tpart or None,
         ),

@@ -9,7 +9,7 @@ Prints one JSON line per query: {"query": ..., "hits": [[doc_id, score]...],
 "seconds": ...}. ``--distributed`` scores in executors (hot terms / huge
 df); default is the driver fast path (pushdown fetch + the auto-selected
 scorer: vectorized block-max "bmx" on hot+selective shapes, vectorized
-exhaustive otherwise). ``--scorer`` forces a path (all are exact).
+exhaustive otherwise). ``--scorer`` forces one of the two (both are exact).
 """
 
 from __future__ import annotations
@@ -31,10 +31,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="conjunctive (AND) semantics instead of score-union OR")
     ap.add_argument("--distributed", action="store_true")
     ap.add_argument("--scorer", default="auto",
-                    choices=["auto", "bmx", "wand", "exhaustive"],
-                    help="force a driver scorer path (all rank-identical)")
+                    choices=["auto", "bmx", "exhaustive"],
+                    help="force a driver scorer path (both rank-identical)")
     args = ap.parse_args(argv)
-    use_wand = {"auto": "auto", "bmx": "bmx", "wand": True, "exhaustive": False}[args.scorer]
+    use_wand = {"auto": "auto", "bmx": "bmx", "exhaustive": False}[args.scorer]
 
     from pyspark.sql import SparkSession
 

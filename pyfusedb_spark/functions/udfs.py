@@ -80,18 +80,6 @@ def term_freqs_udf(preset: str):
 
 _MAX_RUN = 1024  # max postings per packed run row (bounds reader memory)
 
-PACKED_TF_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("tpart", T.IntegerType(), False),
-        T.StructField("docs", T.ArrayType(T.LongType()), False),
-        T.StructField("tfs", T.ArrayType(T.IntegerType()), False),
-        T.StructField("dls", T.ArrayType(T.IntegerType()), False),
-    ]
-)
-
-
 def term_tpart(term: str, n_tparts: int) -> int:
     """Deterministic term -> base hash-partition id, shared by the build
     (exploder), the query side (directory addressing of posting fetches)
@@ -116,14 +104,15 @@ def term_tpart_probe(term: str, n_tparts: int, spread: int) -> list[int]:
     return sorted({(base + j) % n_tparts for j in range(max(1, spread))})
 
 
-def make_packed_tf_exploder(preset: str, bucket_span: int, content_col: str = "content",
-                            n_tparts: int = 1, tpart_spread: int = 1):
-    """mapInArrow fn: corpus rows -> PACKED per-(term,bucket) partial
-    posting runs, one row per distinct (term, bucket) per Arrow batch.
+def make_run_packer(bucket_span: int, n_tparts: int, tpart_spread: int):
+    """Returns ``pack_batch(ids, counters)``: one Arrow batch of corpus
+    rows (doc ids + per-doc term Counters) -> PACKED per-(term,bucket)
+    partial posting runs, one row per distinct (term, bucket), or None
+    for a batch with no terms.
 
     This is the SPIMI map-side partial posting list (north star: partial
-    lists built BEFORE the repartition-by-term shuffle): the shuffle then
-    carries ~|batch vocabulary| packed rows instead of one row per
+    lists built BEFORE the term-partitioned exchange): the tf files then
+    carry ~|batch vocabulary| packed rows instead of one row per
     posting — long-tail terms cost the same, but every mid/hot term
     collapses its per-batch postings into three packed int arrays and
     ONE term string. Term grouping uses pd.factorize (hash, O(n)) + an
@@ -212,20 +201,7 @@ def make_packed_tf_exploder(preset: str, bucket_span: int, content_col: str = "c
         ]
         return pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
-    def pack(batches):
-        az = _get_analyzer(preset)
-        analyze = az.analyze
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = batch.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            contents = batch.column(content_col).to_pylist()
-            rb = pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
-            if rb is not None:
-                yield rb
-
-    pack.pack_batch = pack_batch
-    return pack
+    return pack_batch
 
 
 TF_TASK_SCHEMA = T.StructType(
@@ -262,9 +238,7 @@ def make_tf_fused_task(
     is bit-identical to F.sha2(col, 256) and DuckDB's sha256 (oracle-
     checked). Task fan-out: n_scan_tasks x n_tparts files — bound
     n_tparts accordingly (same knob as encoder memory)."""
-    packer = make_packed_tf_exploder(preset, bucket_span, content_col, n_tparts,
-                                     tpart_spread)
-    pack_batch = packer.pack_batch
+    pack_batch = make_run_packer(bucket_span, n_tparts, tpart_spread)
     import pyarrow as pa
 
     out_schema = pa.schema([("pid", pa.int32()), ("n_docs", pa.int64())])
@@ -334,10 +308,11 @@ def make_tf_fused_task(
 def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
     """mapInArrow fn merging packed runs into encoded chunks.
 
-    Input: PACKED_TF_SCHEMA batches in ARBITRARY row order within the
-    partition (the build no longer pays a JVM sortWithinPartitions on
-    rows carrying fat array payloads — round-2 scaling work: the posting
-    shuffle's reduce-side sort was the stage's scaling bottleneck).
+    Input: packed-run batches (term, bucket, docs, tfs, dls — the tf
+    files make_tf_fused_task writes) in ARBITRARY row order (no JVM
+    sort on rows carrying fat array payloads — round-2 scaling work:
+    the posting shuffle's reduce-side sort was the stage's scaling
+    bottleneck).
     Grouping happens here instead, at Arrow/numpy speed: the term column
     is dictionary-encoded (C-speed hash), only the UNIQUE terms are
     string-sorted (|vocab_partition| << |rows|), and postings get ONE
@@ -355,8 +330,8 @@ def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
     (app/InvertedIndexFinal.py:287-346), distributed — then
     codec.encode_postings_multi for every group at once.
 
-    Memory: materializes one shuffle partition's packed runs (bounded by
-    n_shuffle sizing — see operators/build.py scale notes)."""
+    Memory: materializes one tpart's packed runs (bounded by n_tparts
+    sizing — see operators/build.py scale notes)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -502,8 +477,8 @@ def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
         # materialize the partition's packed runs and encode in ONE pass:
         # grouping does not need runs of a term adjacent (see
         # encode_arrays), so there is no carry-over bookkeeping and no
-        # upstream JVM row sort. Partition size is bounded by n_shuffle
-        # sizing. Per-batch numpy extraction + concat is chunking-safe.
+        # upstream JVM row sort. Per-batch numpy extraction + concat is
+        # chunking-safe.
         parts = [_extract(b) for b in batches if b.num_rows]
         if not parts:
             return
@@ -643,8 +618,8 @@ def make_tpart_build_task(
          stage's residual scaling cost, BENCH/BASELINE.md);
       2. encode all (term, bucket) groups in one numpy pass (a term
          lives in exactly one tpart, so one chunk per (term, bucket) —
-         the doc-ordered-concatenation invariant the WAND cursors need
-         is preserved);
+         the doc-ordered-concatenation invariant the driver scorers
+         need is preserved);
       3. FINALIZE its own slices task-side: first delete any previous
          ``bucket=*/tpart=P`` + ``lexicon/tpart=P`` dirs (a prior failed
          attempt / a rebuild), then write the encoded chunk files AND
@@ -824,7 +799,6 @@ CHUNK_SCHEMA = T.StructType(
 
 def _encode_partition_flat(
     term: np.ndarray,
-    bucket: np.ndarray | None,
     d: np.ndarray,
     t: np.ndarray,
     l: np.ndarray,
@@ -833,7 +807,7 @@ def _encode_partition_flat(
     b: float,
     block_size: int,
 ) -> pd.DataFrame:
-    """Encode one partition's (term[,bucket],doc)-sorted rows into chunk
+    """Encode one partition's (term, doc)-sorted rows into chunk
     rows via codec.encode_postings_multi — ONE vectorized pass for ALL
     groups (per-group numpy-call overhead dominated the stage before).
 
@@ -849,10 +823,7 @@ def _encode_partition_flat(
     n = len(d)
     new = np.empty(n, dtype=bool)
     new[0] = True
-    if bucket is not None:
-        new[1:] = (term[1:] != term[:-1]) | (bucket[1:] != bucket[:-1])
-    else:
-        new[1:] = term[1:] != term[:-1]
+    new[1:] = term[1:] != term[:-1]
     dup = np.zeros(n, dtype=bool)
     dup[1:] = d[1:] == d[:-1]
     keep = new | ~dup
@@ -860,9 +831,6 @@ def _encode_partition_flat(
         seg = np.cumsum(keep) - 1
         t = np.bincount(seg, weights=t).astype(np.int64)
         d, l, term, new = d[keep], l[keep], term[keep], new[keep]
-        if bucket is not None:
-            bucket = bucket[keep]
-        n = len(d)
     starts = np.flatnonzero(new)
     enc = codec.encode_postings_multi(starts, d, t, l, avgdl, k1, b, block_size)
     g = enc["n_groups"]
@@ -883,9 +851,6 @@ def _encode_partition_flat(
         "max_partial": enc["max_partial"],
         "enc_micros": per,
     }
-    if bucket is not None:
-        data["bucket"] = bucket[starts].astype(np.int32)
-        return pd.DataFrame(data)[[f.name for f in CHUNK_SCHEMA_BUCKETED.fields]]
     return pd.DataFrame(data)[[f.name for f in CHUNK_SCHEMA.fields]]
 
 
@@ -901,7 +866,6 @@ def make_chunk_encoder(avgdl: float, k1: float, b: float, block_size: int):
     def encode_terms(pdf: pd.DataFrame) -> pd.DataFrame:
         return _encode_partition_flat(
             pdf["term"].to_numpy(),
-            None,
             pdf["doc_id"].to_numpy(dtype=np.int64),
             pdf["tf"].to_numpy(dtype=np.int64),
             pdf["doc_len"].to_numpy(dtype=np.int64),
@@ -928,11 +892,6 @@ def make_chunk_encoder(avgdl: float, k1: float, b: float, block_size: int):
             yield encode_terms(leftover)
 
     return mapper
-
-
-CHUNK_SCHEMA_BUCKETED = T.StructType(
-    [T.StructField("bucket", T.IntegerType(), False)] + list(CHUNK_SCHEMA.fields)
-)
 
 
 def sha256_col(col: str = "content"):

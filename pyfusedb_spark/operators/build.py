@@ -2,7 +2,7 @@
 
 Reference lifecycle being re-expressed: SPIMI block build
 (``app/InvertedIndexFinal.py:254-285``) + k-way merge (``:287-346``),
-re-architected for Spark's execution model. Default ("file-shuffle")
+re-architected for Spark's execution model. The "file-shuffle"
 pipeline:
 
 Stage "tf"      ONE fused corpus scan (udfs.make_tf_fused_task):
@@ -33,15 +33,10 @@ Stage "lexicon" folded into the posting pass (df(term) = Σ df_chunk
 Stage "norms"   optional exact TF-IDF document norms (v1 semantics,
                 app/InvertedIndex.py:408-419) for the cosine mode.
 
-Legacy modes "per-bucket" / "single-pass" keep the round-2 live
-repartitionByRange exchange (finest per-bucket resume granularity /
-one-job builds on term-range file layout).
-
 Every stage/tpart/bucket commits a manifest (term range, doc count,
 postings, bytes, sha256 lineage, tokens/sec, postings/sec, per-task
 metrics) through ManifestCatalog; a killed build resumes from the last
-committed unit (file-shuffle unit = one tpart, validated against its
-data dirs).
+committed unit (one tpart, validated against its data dirs).
 
 Scale notes (100 TB / 1000 executors): stage "tf" is scan→write with
 zero live shuffles; the posting stage moves data only through the
@@ -57,7 +52,6 @@ here; HDFS/S3 via pyarrow.fs on a cluster).
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import time
@@ -69,17 +63,12 @@ from pyspark.sql import functions as F
 from pyfusedb_spark import fsio
 
 from pyfusedb_spark.functions.udfs import (
-    CHUNK_SCHEMA_BUCKETED,
-    PACKED_TF_SCHEMA,
     TF_TASK_SCHEMA,
     TPART_STATS_SCHEMA,
     TF_COMBINE_SCHEMA,
-    make_packed_encoder,
-    make_packed_tf_exploder,
     make_tf_combine_task,
     make_tf_fused_task,
     make_tpart_build_task,
-    sha256_col,
 )
 from pyfusedb_spark.layout import visible_bucket_components
 from pyfusedb_spark.operators.ids import assign_doc_ids
@@ -94,18 +83,12 @@ class IndexConfig:
     block_size: int = 128
     n_buckets: int = 8
     compute_norms: bool = True
-    shuffle_partitions: int | None = None  # posting-shuffle partitions
-    # "file-shuffle" (default): tf written hive-partitioned by
-    #   tpart = crc32(term) % n_tparts; the posting stage is
-    #   spark.range(n_tparts) -> mapInArrow tasks that read their own
-    #   tpart's files via pyarrow, encode, and write chunk + lexicon
-    #   files directly (no live exchange, no UnsafeRow<->Arrow pair —
-    #   the round-2 scaling residual). Lexicon folds into the same pass.
-    # "per-bucket": legacy live repartitionByRange exchange, one Spark
-    #   job per doc-range bucket -> finest resume granularity.
-    # "single-pass": legacy live exchange, ONE job for all buckets.
-    posting_mode: str = "file-shuffle"
-    # file-shuffle fan-out; None -> corpus-derived (~DOCS_PER_TPART docs
+    # build_index: the parallelism the default n_tparts is capped by
+    # (None -> spark.sparkContext.defaultParallelism; unused when
+    # n_tparts is set). Streaming appends (streaming/incremental.py) also
+    # use it as their per-batch term exchange's partition count.
+    shuffle_partitions: int | None = None
+    # posting-stage fan-out; None -> corpus-derived (~DOCS_PER_TPART docs
     # per tpart, capped at 4x parallelism). Bounds per-task memory (one
     # tpart of packed runs) — set explicitly when docs are far fatter
     # than the testdata mix; keep CONSTANT across cluster sizes when
@@ -161,16 +144,6 @@ def _local_agg(sql: str) -> dict:
     return {c: pdf[c].iloc[0] for c in pdf.columns}
 
 
-def _tf_globs(tf_dir: str) -> str:
-    """Quoted DuckDB glob for whichever tf layout exists (flat vs
-    hive bucket dirs) — DuckDB errors on a glob matching no files."""
-    import glob as _g
-
-    if _g.glob(os.path.join(tf_dir, "*.parquet")):
-        return f"'{tf_dir}/*.parquet'"
-    return f"'{tf_dir}/*/*.parquet'"
-
-
 def _tf_long(spark: SparkSession, tf_dir: str) -> DataFrame:
     """Long-format (term, doc_id, tf, dl) view over the packed tf runs."""
     return (
@@ -203,7 +176,7 @@ def _assemble_doc_stats(spark: SparkSession, ds_sha_dir: str, tf_dir: str, ds_di
             f"COPY (SELECT s.doc_id, coalesce(l.doc_len, 0)::BIGINT AS doc_len, s.sha256 "
             f"FROM '{ds_sha_dir}/*.parquet' s LEFT JOIN ("
             f"  SELECT doc_id, max(dl)::BIGINT AS doc_len FROM ("
-            f"    SELECT unnest(docs) AS doc_id, unnest(dls) AS dl FROM parquet_scan({_tf_globs(tf_dir)})"
+            f"    SELECT unnest(docs) AS doc_id, unnest(dls) AS dl FROM '{tf_dir}/*/*.parquet'"
             f"  ) GROUP BY doc_id"
             f") l USING (doc_id)) TO '{ds_dir}/part-00000.parquet' (FORMAT PARQUET)"
         )
@@ -223,57 +196,6 @@ def _assemble_doc_stats(spark: SparkSession, ds_sha_dir: str, tf_dir: str, ds_di
         .write.mode("overwrite")
         .parquet(ds_dir)
     )
-
-
-
-def _lexicon_local(idx_dir: str, lex_dir: str, cat) -> bool:
-    """Driver-local lexicon aggregation (term-sorted parquet) when the
-    chunk metadata fits comfortably on the driver — saves a whole Spark
-    job of scheduling latency per build. Returns False (caller uses the
-    Spark path) for big indexes or when DuckDB is unavailable."""
-    try:
-        if fsio.is_uri(idx_dir):
-            return False
-        import duckdb  # noqa: PLC0415
-
-        meta_cols_bytes = _dir_bytes(idx_dir)
-        if meta_cols_bytes > 4 << 30:
-            return False
-        staging = cat.staging_dir(lex_dir)
-        os.makedirs(staging, exist_ok=True)
-        duckdb.sql(
-            f"COPY (SELECT term, sum(df_chunk)::BIGINT AS df, "
-            f"sum(sum_tf)::BIGINT AS total_tf, max(max_partial)::FLOAT AS max_partial, "
-            f"count(*)::BIGINT AS n_chunks "
-            f"FROM parquet_scan('{idx_dir}/*/*.parquet') GROUP BY term ORDER BY term) "
-            f"TO '{staging}/part-00000.parquet' (FORMAT PARQUET, ROW_GROUP_SIZE 16384)"
-        )
-        cat.promote_dir(staging, lex_dir)
-        return True
-    except Exception:
-        return False
-
-
-def _partition_metrics(final_dir: str) -> list | None:
-    """Per-shuffle-partition posting metrics (north rule: per-partition
-    logging): [pid, n_terms, n_postings, encode_cpu_s, postings_per_cpu_s]."""
-    try:
-        if fsio.is_uri(final_dir):
-            return None
-        import duckdb  # noqa: PLC0415
-
-        rows = duckdb.sql(
-            f"SELECT pid, count(*)::BIGINT, coalesce(sum(df_chunk),0)::BIGINT, "
-            f"coalesce(sum(enc_micros),0)::BIGINT FROM '{final_dir}/*.parquet' "
-            f"GROUP BY pid ORDER BY pid"
-        ).fetchall()
-        return [
-            [int(p), int(nt), int(np_), round(em / 1e6, 3),
-             round(np_ / (em / 1e6), 1) if em else None]
-            for p, nt, np_, em in rows
-        ]
-    except Exception:
-        return None
 
 
 def _tpart_committed(cat: ManifestCatalog, tp: int) -> bool:
@@ -325,14 +247,16 @@ def _file_shuffle_postings(
     avgdl: float,
     config: IndexConfig,
     resume: bool,
-    tpart_spread: int = 1,
+    tpart_spread: int,
 ) -> None:
-    """File-shuffle posting + lexicon stage (see IndexConfig docstring
+    """File-shuffle posting + lexicon stage (see the module docstring
     and udfs.make_tpart_build_task). Resume granularity is ONE TPART:
     each tpart commits a `tpart=P` manifest listing its data dirs + per-
     bucket stats; a killed build reruns only invalid/missing tparts.
-    Aggregate bucket manifests + stage manifests are derived from the
-    tpart manifests (cheap, idempotent, no read-back jobs)."""
+    Aggregate bucket manifests + both stage manifests are derived from
+    the tpart manifests (cheap, idempotent, no read-back of chunk
+    files), and re-derived whenever either stage manifest is missing —
+    a crash between the two commits resumes without re-running a tpart."""
     missing = [
         tp for tp in range(n_tparts)
         if not (resume and _tpart_committed(cat, tp))
@@ -432,7 +356,12 @@ def _file_shuffle_postings(
                 },
             )
     # ---- aggregate manifests from the committed tpart units ----
-    if not (resume and cat.is_committed("stage_postings") and not missing):
+    if not (
+        resume
+        and not missing
+        and cat.is_committed("stage_postings")
+        and cat.is_committed("stage_lexicon")
+    ):
         by_bucket: dict[int, dict] = {}
         lex_terms = 0
         lex_postings = 0
@@ -491,8 +420,7 @@ def _file_shuffle_postings(
             )
         cat.commit(
             "stage_postings",
-            {"data_dir": idx_dir, "seconds": round(secs, 3),
-             "mode": "file-shuffle", "n_tparts": n_tparts},
+            {"data_dir": idx_dir, "seconds": round(secs, 3), "n_tparts": n_tparts},
         )
         # lexicon was folded into the same pass (a term lives in exactly
         # ONE tpart, so each task writes its final lexicon slice)
@@ -520,10 +448,6 @@ def _write_empty_lexicon(lex_dir: str) -> None:
         }
     )
     fsio.write_parquet_atomic(empty, fsio.join(lex_dir, "part-0.parquet"))
-
-
-def _dir_bytes(path: str) -> int:
-    return fsio.dir_bytes(path)
 
 
 def build_index(
@@ -556,12 +480,23 @@ def build_index(
             f"{out_dir} holds streamed appends; build_index would drop "
             "them — build into a fresh directory"
         )
+    # a stage_tf without n_tparts was written by the retired live-
+    # exchange posting modes (flat per-bucket chunk files): neither a
+    # resume nor an in-place rebuild can read or clean that layout
+    m_tf = cat.read_manifest("stage_tf")
+    if m_tf is not None and not m_tf.get("n_tparts"):
+        raise ValueError(
+            f"{out_dir} holds an index without the tpart layout, which "
+            "build_index can no longer resume or overwrite — build into a "
+            "fresh directory"
+        )
     # drop staging dirs a killed run left behind: they'd match the
     # `dir/*/*.parquet` lexicon/stats globs and double-count chunks
     cat.clean_orphan_staging(out_dir)
     if not resume:
         for key in list(cat.snapshot().get("manifests", {})):
             cat.uncommit(key)
+        m_tf = None
 
     tf_dir = fsio.join(out_dir, "tf")
     ds_dir = fsio.join(out_dir, "doc_stats")
@@ -569,27 +504,21 @@ def build_index(
     lex_dir = fsio.join(out_dir, "lexicon")
 
     # ---------------- stage tf ----------------
-    # Three narrow jobs, zero shuffles, no caching of wide intermediates
-    # (a persisted map<term,tf> column measured 2-3x slower end-to-end
-    # and its fixed JVM-side costs wrecked N->4N scaling):
-    #   A. (doc_id, sha256) — pure JVM codegen, written once;
-    #   B. exploded (doc_id, doc_len, bucket, term, tf) rows straight
-    #      out of ONE mapInPandas Arrow pass, written partitioned by
-    #      bucket (tokenize happens exactly once, here);
+    # Narrow jobs only, zero live shuffles, no caching of wide
+    # intermediates (a persisted map<term,tf> column measured 2-3x
+    # slower end-to-end and its fixed JVM-side costs wrecked N->4N
+    # scaling):
+    #   A. ONE fused corpus scan (udfs.make_tf_fused_task): the task
+    #      tokenizes, packs runs into tf/tpart=P files AND writes the
+    #      (doc_id, sha256) lineage file — no second scan for sha256 and
+    #      no Spark dynamic-partition writer fanning out fat array rows;
+    #   B. an optional per-tpart combine pass bounding tf file fan-out;
     #   C. doc_stats = sha ⟕ per-doc doc_len — tiny driver-local DuckDB
     #      agg over the two parquet dirs (Spark fallback for real
     #      clusters / non-local filesystems).
-    m_tf = cat.read_manifest("stage_tf") if resume else None
     ds_sha_dir = fsio.join(out_dir, "doc_sha")
-    # resolved inside the file-shuffle branch once n_docs is known —
-    # the default is corpus-derived (see _default_n_tparts), and tf
-    # file fan-out is scan_tasks x n_tparts so oversizing it at toy
-    # scale is pure file-commit overhead.
-    n_tparts_cfg = None
     if m_tf is None:
         t0 = time.perf_counter()
-        _dbg = os.environ.get("PYFUSEDB_TIMING") == "1"
-        sha_src = None
         if doc_id_col is None:
             # assign_doc_ids persists its sorted intermediate; ids are
             # dense 0..N-1 so count/max come free — no extra action
@@ -598,7 +527,6 @@ def build_index(
             max_id = n_docs - 1
         else:
             docs = corpus.withColumnRenamed(doc_id_col, "doc_id") if doc_id_col != "doc_id" else corpus
-            sha_src = docs  # sha job reads the un-repartitioned scan
             # Small-file guard: a corpus materialized as a few small
             # parquet files bin-packs into fewer scan splits than cores
             # (spark.sql.files.maxPartitionBytes), which would serialize
@@ -617,107 +545,54 @@ def build_index(
             target = config.scan_tasks or par * max(1, int(config.scan_waves))
             if docs.rdd.getNumPartitions() < target:
                 docs = docs.repartition(target)
-        if config.posting_mode == "file-shuffle":
-            # FUSED single corpus scan (udfs.make_tf_fused_task): the
-            # task tokenizes, packs runs into tpart files AND computes
-            # sha256 lineage itself — the legacy path's separate JVM
-            # sha256 job re-scanned the whole corpus, and Spark's
-            # dynamic-partition writer paid a per-row fan-out on fat
-            # array rows. bucket_span needs max_id up front: a column-
-            # pruned agg over doc_id alone (no content read).
-            if doc_id_col is not None:
-                r = docs.agg(
-                    F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("m")
-                ).collect()[0]
-                n_docs, max_id = int(r["n"]), int(r["m"] or 0)
-            bucket_span = max(1, math.ceil((max_id + 1) / config.n_buckets))
-            n_tparts_cfg = config.n_tparts or _default_n_tparts(
-                n_docs,
-                config.shuffle_partitions
-                or spark.sparkContext.defaultParallelism,
-            )
-            staging_tf = cat.staging_dir(tf_dir)
-            staging_sha = cat.staging_dir(ds_sha_dir)
-            fsio.makedirs(staging_tf)
-            fsio.makedirs(staging_sha)
-            scan_rows = docs.select(
-                F.col("doc_id").cast("long").alias("doc_id"), content_col
-            ).mapInArrow(
-                make_tf_fused_task(
-                    config.preset, bucket_span, content_col,
-                    n_tparts_cfg, staging_tf, staging_sha,
-                    tpart_spread=config.n_buckets,
-                ),
-                TF_TASK_SCHEMA,
+            # bucket_span needs max_id up front: a column-pruned agg
+            # over doc_id alone (no content read)
+            r = docs.agg(
+                F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("m")
+            ).collect()[0]
+            n_docs, max_id = int(r["n"]), int(r["m"] or 0)
+        bucket_span = max(1, math.ceil((max_id + 1) / config.n_buckets))
+        # corpus-derived default (see _default_n_tparts): tf file
+        # fan-out is scan_tasks x n_tparts, so oversizing it at toy
+        # scale is pure file-commit overhead
+        n_tparts_cfg = config.n_tparts or _default_n_tparts(
+            n_docs,
+            config.shuffle_partitions
+            or spark.sparkContext.defaultParallelism,
+        )
+        staging_tf = cat.staging_dir(tf_dir)
+        staging_sha = cat.staging_dir(ds_sha_dir)
+        fsio.makedirs(staging_tf)
+        fsio.makedirs(staging_sha)
+        scan_rows = docs.select(
+            F.col("doc_id").cast("long").alias("doc_id"), content_col
+        ).mapInArrow(
+            make_tf_fused_task(
+                config.preset, bucket_span, content_col,
+                n_tparts_cfg, staging_tf, staging_sha,
+                tpart_spread=config.n_buckets,
+            ),
+            TF_TASK_SCHEMA,
+        ).collect()
+        n_scan_tasks = len(scan_rows)
+        bound = config.max_tf_files_per_tpart
+        if bound is not None and n_scan_tasks > bound:
+            # fan-out bound: scan_tasks files per tpart -> a handful
+            # (one per-tpart task wave; see make_tf_combine_task)
+            combined = cat.staging_dir(tf_dir)
+            fsio.makedirs(combined)
+            spark.range(0, n_tparts_cfg, 1, n_tparts_cfg).mapInArrow(
+                make_tf_combine_task(staging_tf, combined),
+                TF_COMBINE_SCHEMA,
             ).collect()
-            n_scan_tasks = len(scan_rows)
-            bound = config.max_tf_files_per_tpart
-            if bound is not None and n_scan_tasks > bound:
-                # fan-out bound: scan_tasks files per tpart -> a handful
-                # (one per-tpart task wave; see make_tf_combine_task)
-                combined = cat.staging_dir(tf_dir)
-                fsio.makedirs(combined)
-                spark.range(0, n_tparts_cfg, 1, n_tparts_cfg).mapInArrow(
-                    make_tf_combine_task(staging_tf, combined),
-                    TF_COMBINE_SCHEMA,
-                ).collect()
-                fsio.rmtree(staging_tf)
-                staging_tf = combined
-            cat.promote_dir(staging_tf, tf_dir)
-            cat.promote_dir(staging_sha, ds_sha_dir)
-            if _dbg:
-                import sys
-
-                print(f"[tf] fused scan done at +{time.perf_counter()-t0:.1f}s", file=sys.stderr)
-        else:
-            # -- job A: sha256 lineage (JVM-only) --
-            (sha_src if sha_src is not None else docs).select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                sha256_col(content_col).alias("sha256"),
-            ).write.mode("overwrite").parquet(ds_sha_dir)
-            if doc_id_col is not None:
-                row = _local_agg(
-                    f"SELECT count(*)::BIGINT AS n, coalesce(max(doc_id), 0)::BIGINT AS m "
-                    f"FROM '{ds_sha_dir}/*.parquet'"
-                )
-                if row is None:
-                    r = spark.read.parquet(ds_sha_dir).agg(
-                        F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("m")
-                    ).collect()[0]
-                    row = {"n": r["n"], "m": r["m"] or 0}
-                n_docs, max_id = int(row["n"]), int(row["m"])
-            bucket_span = max(1, math.ceil((max_id + 1) / config.n_buckets))
-            if _dbg:
-                import sys
-
-                print(f"[tf] sha/ids done at +{time.perf_counter()-t0:.1f}s", file=sys.stderr)
-            # -- job B: tokenize + explode in one Arrow pass --
-            # per-bucket mode needs hive bucket dirs (its jobs filter
-            # bucket == k -> directory pruning); single-pass groups on
-            # the bucket COLUMN and reads everything once, so skip
-            # partitionBy — fewer output files, much lighter job commit
-            tf_writer = (
-                docs.select(F.col("doc_id").cast("long").alias("doc_id"), content_col)
-                .mapInArrow(
-                    make_packed_tf_exploder(
-                        config.preset, bucket_span, content_col, n_tparts=1
-                    ),
-                    PACKED_TF_SCHEMA,
-                )
-                .write.mode("overwrite")
-            )
-            if config.posting_mode != "single-pass":
-                tf_writer = tf_writer.partitionBy("bucket")
-            tf_writer.parquet(tf_dir)
-            if _dbg:
-                print(f"[tf] tf rows written at +{time.perf_counter()-t0:.1f}s", file=sys.stderr)
+            fsio.rmtree(staging_tf)
+            staging_tf = combined
+        cat.promote_dir(staging_tf, tf_dir)
+        cat.promote_dir(staging_sha, ds_sha_dir)
         cache = getattr(docs, "_pyfusedb_cache", None)
         if cache is not None:
             cache.unpersist()
-        # -- job C: assemble doc_stats (empty docs get doc_len=0) --
         _assemble_doc_stats(spark, ds_sha_dir, tf_dir, ds_dir)
-        if _dbg:
-            print(f"[tf] doc_stats written at +{time.perf_counter()-t0:.1f}s", file=sys.stderr)
         secs = time.perf_counter() - t0
         m_tf = {
             "data_dir": tf_dir,
@@ -725,7 +600,7 @@ def build_index(
             "max_doc_id": max_id,
             "bucket_span": bucket_span,
             "n_tparts": n_tparts_cfg,
-            "tpart_spread": config.n_buckets if n_tparts_cfg else None,
+            "tpart_spread": config.n_buckets,
             "seconds": round(secs, 3),
             "docs_per_sec": round(n_docs / secs, 1) if secs > 0 else None,
         }
@@ -733,14 +608,8 @@ def build_index(
 
     n_docs = m_tf["n_docs"]
     bucket_span = m_tf["bucket_span"]
-    # tf layout is fixed at tf-write time: resuming a legacy (pre-tpart)
-    # index with a file-shuffle config falls back to the single-pass
-    # live exchange, which reads either legacy layout correctly
-    n_tparts = m_tf.get("n_tparts")
+    n_tparts = m_tf["n_tparts"]
     tpart_spread = m_tf.get("tpart_spread") or 1
-    posting_mode = config.posting_mode
-    if posting_mode == "file-shuffle" and not n_tparts:
-        posting_mode = "single-pass"
 
     # ---------------- stage stats ----------------
     m_stats = cat.read_manifest("stage_stats") if resume else None
@@ -774,153 +643,12 @@ def build_index(
         cat.commit("stage_stats", m_stats)
     avgdl = m_stats["avgdl"]
 
-    # ---------------- per-bucket posting build ----------------
-    n_shuffle = config.shuffle_partitions or spark.sparkContext.defaultParallelism
-    encoder = make_packed_encoder(avgdl, config.k1, config.b, config.block_size)
-
-    def _build_bucket(k: int) -> None:
-        key = f"bucket={k}"
-        t0 = time.perf_counter()
-        final_dir = fsio.join(idx_dir, f"bucket={k}")
-        tf_k = spark.read.parquet(tf_dir).where(F.col("bucket") == k)
-        # repartitionByRange on term: each output file covers a narrow
-        # term range, so query fetches prune to ~1-2 FILES via file-level
-        # min/max stats (hash placement made every term touch every file,
-        # ~32MB read amp per hot lookup at 1M docs). The range sampler
-        # scans packed runs (~20x fewer rows than raw postings), so its
-        # extra pass is cheap now
-        # no sortWithinPartitions: the encoder groups by dictionary-
-        # encode + integer sort (Arrow/numpy) — the JVM row sort over fat
-        # array payloads was the posting stage's scaling bottleneck
-        chunks = (
-            tf_k.select("term", F.col("bucket").cast("int").alias("bucket"),
-                        "docs", "tfs", "dls")
-            .repartitionByRange(n_shuffle, "term")
-            .mapInArrow(encoder, CHUNK_SCHEMA_BUCKETED)
-            .drop("bucket")  # bucket is the hive dir here
-        )
-        staging = cat.staging_dir(final_dir)
-        # small row groups -> parquet min/max stats on `term` give real
-        # row-group pruning for per-query chunk fetches (a single default
-        # 128M row group would force every query to read whole files)
-        chunks.write.option("parquet.block.size", str(256 << 10)).mode("overwrite").parquet(staging)
-        cat.promote_dir(staging, final_dir)
-        secs = time.perf_counter() - t0
-        cat.commit(key, _bucket_manifest_stats(final_dir, k, secs))
-
-    def _bucket_manifest_stats(final_dir: str, k: int, secs: float) -> dict:
-        stat = _local_agg(
-            f"SELECT count(*)::BIGINT AS n_terms, coalesce(sum(df_chunk),0)::BIGINT AS n_postings, "
-            f"min(term) AS term_lo, max(term) AS term_hi, "
-            f"coalesce(sum(enc_micros),0)::BIGINT AS enc_micros FROM '{final_dir}/*.parquet'"
-        )
-        if stat is None:  # no duckdb -> Spark read-back (real-cluster path)
-            stat = (
-                spark.read.parquet(final_dir)
-                .agg(
-                    F.count(F.lit(1)).alias("n_terms"),
-                    F.sum("df_chunk").alias("n_postings"),
-                    F.min("term").alias("term_lo"),
-                    F.max("term").alias("term_hi"),
-                    F.sum("enc_micros").alias("enc_micros"),
-                )
-                .collect()[0]
-            )
-        n_postings = int(stat["n_postings"] or 0)
-        return {
-            "data_dir": final_dir,
-            "bucket": k,
-            "doc_id_range": [k * bucket_span, (k + 1) * bucket_span - 1],
-            "term_range": [stat["term_lo"], stat["term_hi"]],
-            "n_terms": int(stat["n_terms"]),
-            "n_postings": n_postings,
-            "bytes": _dir_bytes(final_dir),
-            "seconds": round(secs, 3),
-            "postings_per_sec": round(n_postings / secs, 1) if secs > 0 else None,
-            "encode_cpu_seconds": round(int(stat["enc_micros"] or 0) / 1e6, 3),
-            "partitions": _partition_metrics(final_dir),
-        }
-
-    if posting_mode == "file-shuffle":
-        _file_shuffle_postings(
-            spark, cat, tf_dir, idx_dir, lex_dir, n_tparts, n_docs,
-            bucket_span, avgdl, config, resume, tpart_spread=tpart_spread,
-        )
-    elif posting_mode == "single-pass":
-        if not (resume and cat.is_committed("stage_postings")):
-            t0 = time.perf_counter()
-            tf_all = spark.read.parquet(tf_dir)
-            chunks = (
-                tf_all.select(
-                    "term", F.col("bucket").cast("int").alias("bucket"),
-                    "docs", "tfs", "dls",
-                )
-                .repartitionByRange(n_shuffle, "term", "bucket")
-                .mapInArrow(encoder, CHUNK_SCHEMA_BUCKETED)
-            )
-            staging = cat.staging_dir(idx_dir)
-            chunks.write.option("parquet.block.size", str(256 << 10)).mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(staging)
-            cat.promote_dir(staging, idx_dir)
-            secs = time.perf_counter() - t0
-            for k in range(config.n_buckets):
-                final_dir = fsio.join(idx_dir, f"bucket={k}")
-                if fsio.exists(final_dir):
-                    cat.commit(f"bucket={k}", _bucket_manifest_stats(final_dir, k, secs))
-            cat.commit("stage_postings", {"data_dir": idx_dir, "seconds": round(secs, 3),
-                                          "mode": "single-pass"})
-    else:
-        # NOTE: buckets run SERIALLY on purpose. Thread-pooled concurrent
-        # jobs were measured 2.7x SLOWER in local mode (concurrent
-        # mapInPandas jobs can't share the Python worker pool -> worker
-        # spawn storms: 4 threaded buckets 16.5s vs 3.6s serial at 12k
-        # docs). On a real multi-executor cluster with dynamic allocation,
-        # revisiting concurrency per bucket is a scheduler-level decision.
-        for k in range(config.n_buckets):
-            if resume and cat.is_committed(f"bucket={k}"):
-                continue
-            _build_bucket(k)
-
-    # ---------------- lexicon ----------------
-    # read unconditionally: with resume=False every manifest was
-    # uncommitted at function start, so a present manifest was committed
-    # THIS run (file-shuffle folds the lexicon into the posting pass)
+    # ---------------- postings + lexicon ----------------
+    _file_shuffle_postings(
+        spark, cat, tf_dir, idx_dir, lex_dir, n_tparts, n_docs,
+        bucket_span, avgdl, config, resume, tpart_spread,
+    )
     m_lex = cat.read_manifest("stage_lexicon")
-    if m_lex is None:
-        t0 = time.perf_counter()
-        if not _lexicon_local(idx_dir, lex_dir, cat):
-            lex = (
-                spark.read.parquet(idx_dir)
-                .groupBy("term")
-                .agg(
-                    F.sum("df_chunk").alias("df"),
-                    F.sum("sum_tf").alias("total_tf"),
-                    F.max("max_partial").alias("max_partial"),
-                    F.count(F.lit(1)).alias("n_chunks"),
-                )
-            )
-            staging = cat.staging_dir(lex_dir)
-            lex.repartitionByRange(max(1, n_shuffle // 4), "term").sortWithinPartitions(
-                "term"
-            ).write.option("parquet.block.size", str(256 << 10)).mode("overwrite").parquet(staging)
-            cat.promote_dir(staging, lex_dir)
-        row = _local_agg(
-            f"SELECT count(*)::BIGINT AS vocab, coalesce(sum(df),0)::BIGINT AS postings "
-            f"FROM '{lex_dir}/*.parquet'"
-        )
-        if row is None:
-            r = spark.read.parquet(lex_dir).agg(
-                F.count(F.lit(1)).alias("vocab"), F.sum("df").alias("postings")
-            ).collect()[0]
-            row = {"vocab": r["vocab"], "postings": r["postings"]}
-        m_lex = {
-            "data_dir": lex_dir,
-            "vocabulary": int(row["vocab"]),
-            "n_postings": int(row["postings"] or 0),
-            "seconds": round(time.perf_counter() - t0, 3),
-        }
-        cat.commit("stage_lexicon", m_lex)
 
     # ---------------- norms (exact, v1 semantics) ----------------
     if config.compute_norms and (not resume or cat.read_manifest("stage_norms") is None):
@@ -961,11 +689,10 @@ def build_index(
         "format_version": 1,
         "config": asdict(config),
         "max_doc_id": m_tf.get("max_doc_id"),
-        # query side keys tpart directory addressing off these (None ->
-        # legacy term-range file layout, no tpart filter applied);
+        # query side keys tpart directory addressing off these;
         # tpart_spread = bucket-salt width of the routing hash
         "n_tparts": n_tparts,
-        "tpart_spread": tpart_spread if n_tparts else None,
+        "tpart_spread": tpart_spread,
         "tokens_per_sec": (
             round(total_len / tok_secs, 1) if tok_secs else None
         ),

@@ -9,9 +9,9 @@ with:
   decoded ONCE per term into a score-ready :class:`TermPostings` (doc
   ids, BM25 doc-side partials, tfs, block metadata) that the driver LRU
   keeps; a warm search is dict lookups plus numpy scoring over those
-  arrays — exhaustive, vectorized block-max ("bmx") or the cursor
-  **block-max WAND** (R4 + C4 in SURVEY.md §2) — the reference has no
-  early termination at all (full sort, ``app/InvertedIndex.py:384``);
+  arrays — exhaustive, or the vectorized **block-max** scorer ("bmx",
+  R4 + C4 in SURVEY.md §2) — the reference has no early termination at
+  all (full sort, ``app/InvertedIndex.py:384``);
 - a *distributed path* for hot terms / huge df: decode chunks in
   executors via ``mapInPandas``, explode score contributions, one
   ``groupBy(doc_id)`` shuffle, ``orderBy().limit(k)`` (Spark plans
@@ -23,7 +23,6 @@ order (-score, doc_id) (SURVEY.md §7.5).
 
 from __future__ import annotations
 
-import heapq
 import json
 import math
 import os
@@ -424,10 +423,11 @@ class FuseIndex:
 
     def _tpart_filter_vals(self, terms: list[str]) -> list[int] | None:
         """Hash-partition ids covering `terms` for a tpart-layout index
-        (index/bucket=K/tpart=P dirs, build.py file-shuffle mode) —
+        (index/bucket=K/tpart=P dirs, operators/build.py) —
         O(spread) directory addressing per term (the routing hash is
         salted by the doc-range bucket to defuse hot-term skew; see
-        udfs.term_tpart_probe). None = legacy layout."""
+        udfs.term_tpart_probe). None = an index written before the
+        tpart layout."""
         n = self.stats.get("n_tparts")
         if not n:
             return None
@@ -596,14 +596,17 @@ class FuseIndex:
         ``use_wand="auto"`` picks the vectorized block-max scorer
         ("bmx") when a hot/rare df split lets it leave most hot blocks
         unscored, and the vectorized exhaustive scorer (one bincount
-        over every posting) otherwise. The cursor-loop WAND takes one
-        Python step per posting it visits (~25x slower per posting than
-        the numpy scorers), so it is never auto-picked; it stays as the
-        reference algorithm the forced-path tests compare against. All
+        over every posting) otherwise. ``"bmx"`` and ``False`` force one
+        of the two (bmx still falls back to exhaustive on shapes it
+        cannot prune); any other value raises ``ValueError``. Both
         paths are rank-identical (tests force each).
         ``last_search_stats`` records the path, its pruning counts and
         the fetch's ``chunk_cache_hits``, ``chunk_cache_misses`` and
         ``decoded_postings``."""
+        if use_wand not in ("auto", "bmx", False):
+            raise ValueError(
+                f"use_wand must be 'auto', 'bmx' or False, not {use_wand!r}"
+            )
         self._refresh_if_stale()
         q_tfs = self._query_terms(query)
         if not q_tfs:
@@ -631,22 +634,20 @@ class FuseIndex:
         use_wand: bool | str,
     ) -> list[tuple[int, float]]:
         """Route to one scorer; it or this sets ``last_search_stats``."""
-        # wand_safe gates EVERY block-max-pruned path (auto-bmx, forced
-        # bmx, cursor WAND): incremental appends that drift avgdl past
-        # tolerance make the stored block-max bounds stale upper bounds,
-        # so pruning could silently drop true top-k docs. Scoring stays
-        # exact through the exhaustive path (streaming/incremental.py).
+        # wand_safe gates the block-max-pruned path (auto or forced
+        # bmx): incremental appends that drift avgdl past tolerance make
+        # the stored block-max bounds stale upper bounds, so pruning
+        # could silently drop true top-k docs. Scoring stays exact
+        # through the exhaustive path (streaming/incremental.py).
         bounds_safe = self.stats.get("wand_safe") is not False
+        use_bmx = use_wand == "bmx"
         if use_wand == "auto":
             df_vals = [dfs[t] for t in terms]
             hot_cut = self._hot_cut(df_vals, top_k)
             rare_total = sum(v for v in df_vals if v <= hot_cut)
             hot_total = sum(v for v in df_vals if v > hot_cut)
-            if (
-                bounds_safe
-                and mode == "bm25"
-                and not conjunctive
-                and len(terms) >= 2
+            use_bmx = (
+                len(terms) >= 2
                 and min(df_vals) >= top_k
                 and max(df_vals) >= 16 * min(df_vals)
                 # engage only when candidate coverage still skips >=75%
@@ -654,37 +655,12 @@ class FuseIndex:
                 # each); below that the block gathers approach a full
                 # scan and plain exhaustive wins
                 and 4 * rare_total * self.block_size < hot_total
-            ):
-                out = self._blockmax_vectorized(chunks, terms, q_tfs, dfs, top_k)
-                if out is not None:
-                    return out
-            use_wand = False
-        if not bounds_safe:
-            use_wand = False
-        if use_wand == "bmx" and mode == "bm25" and not conjunctive:
+            )
+        if use_bmx and bounds_safe and mode == "bm25" and not conjunctive:
             out = self._blockmax_vectorized(chunks, terms, q_tfs, dfs, top_k)
             if out is not None:
                 return out
             # bmx declined this shape: fall through to exhaustive
-        elif mode == "bm25" and use_wand and not conjunctive:
-            cursors = [
-                TermCursor(chunks[t], float(q_tfs[t]) * bm25_idf(dfs[t], self.n_docs))
-                for t in terms
-            ]
-            out = wand_topk(cursors, top_k)
-            total_blocks = sum(c.n_blocks for c in cursors)
-            scored = sum(c.blocks_scored for c in cursors)
-            self.last_search_stats = {
-                "path": "wand",
-                "postings_total": sum(c.docs.size for c in cursors),
-                "blocks_total": total_blocks,
-                "blocks_scored": scored,
-                "blocks_skipped": total_blocks - scored,
-                # scored blocks hold <= block_size postings each: upper
-                # bound on postings actually examined
-                "postings_touched_max": scored * self.block_size,
-            }
-            return out
         out = self._exhaustive(chunks, terms, q_tfs, dfs, top_k, mode, conjunctive)
         self.last_search_stats = {
             "path": "exhaustive",
@@ -709,10 +685,10 @@ class FuseIndex:
     ) -> list[tuple[int, float]] | None:
         """Exact BM25 top-k with VECTORIZED block-max skipping ("bmx").
 
-        The cursor-loop WAND (wand_topk) takes one Python step per
-        posting, so it loses to the exhaustive bincount unless it skips
-        ~everything. This scorer keeps the skipping but stays
-        numpy-vectorized end to end over the cached postings:
+        A cursor-loop WAND takes one Python step per posting, so it
+        loses to the exhaustive bincount unless it skips ~everything.
+        This scorer keeps block-max skipping but stays numpy-vectorized
+        end to end over the cached postings:
 
           A. add RARE terms (df <= hot cutoff) fully into a dense
              accumulator -> theta_lb = k-th best rare-only score (a
@@ -974,143 +950,6 @@ class FuseIndex:
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(top_k)
         )
-
-
-# --------------------------------------------------------------------------
-# Block-max WAND (driver-side)
-# --------------------------------------------------------------------------
-
-class TermCursor:
-    """Cursor over one term's cached :class:`TermPostings`, moving block
-    by block with the C4 block-max metadata."""
-
-    __slots__ = (
-        "qw", "docs", "partials", "blk_start", "blk_last", "blk_max",
-        "n_blocks", "blk", "idx", "end", "cur_doc", "max_score",
-        "blocks_scored",
-    )
-
-    def __init__(self, postings: TermPostings, qw: float):
-        self.qw = qw
-        self.docs, self.partials = postings.docs, postings.partials
-        self.blk_start, self.blk_last = postings.blk_start, postings.blk_last
-        self.blk_max = postings.blk_max
-        self.n_blocks = len(self.blk_last)
-        self.max_score = qw * float(self.blk_max.max()) if self.n_blocks else 0.0
-        self.blocks_scored = 0
-        self.blk = -1
-        self.idx = self.end = 0
-        if self.n_blocks:
-            self._load_block(0)
-        else:
-            self.cur_doc = _INF
-
-    def _load_block(self, blk: int) -> None:
-        self.blk = blk
-        self.blocks_scored += 1
-        self.idx = int(self.blk_start[blk])
-        self.end = int(self.blk_start[blk + 1])
-        self.cur_doc = int(self.docs[self.idx])
-
-    def block_upper_bound(self) -> float:
-        return self.qw * float(self.blk_max[self.blk])
-
-    def current_block_last(self) -> int:
-        return int(self.blk_last[self.blk])
-
-    def score_current(self) -> float:
-        return self.qw * float(self.partials[self.idx])
-
-    def advance(self) -> None:
-        """Move to next posting."""
-        self.idx += 1
-        if self.idx < self.end:
-            self.cur_doc = int(self.docs[self.idx])
-            return
-        if self.blk + 1 < self.n_blocks:
-            self._load_block(self.blk + 1)
-        else:
-            self.cur_doc = _INF
-
-    def advance_to(self, target: int) -> None:
-        """Galloping skip to first doc >= target using block metadata."""
-        if self.cur_doc >= target:
-            return
-        if self.blk_last[self.blk] < target:
-            nxt = int(np.searchsorted(self.blk_last, target, side="left"))
-            if nxt >= self.n_blocks:
-                self.cur_doc = _INF
-                return
-            self._load_block(nxt)
-        # within current (possibly fresh) block
-        pos = int(np.searchsorted(self.docs[self.idx:self.end], target, side="left")) + self.idx
-        if pos < self.end:
-            self.idx = pos
-            self.cur_doc = int(self.docs[pos])
-        else:  # can only happen if target > last of final block
-            self.cur_doc = _INF
-
-
-_INF = 1 << 62
-
-
-def wand_topk(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:
-    """Block-max WAND over doc-ordered cursors. Exact top-k with total
-    order (-score, doc_id); pruning uses strict UB < θ so score ties are
-    still examined (doc_id tie-break preserved)."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) == k else -math.inf
-
-    active = [c for c in cursors if c.cur_doc < _INF]
-    while True:
-        active = [c for c in active if c.cur_doc < _INF]
-        if not active:
-            break
-        active.sort(key=lambda c: c.cur_doc)
-        th = theta()
-        prefix = 0.0
-        pivot = -1
-        for i, c in enumerate(active):
-            prefix += c.max_score
-            if prefix >= th:
-                pivot = i
-                break
-        if pivot == -1:
-            break  # even all terms together can't reach θ
-        pivot_doc = active[pivot].cur_doc
-        if active[0].cur_doc == pivot_doc:
-            # group = every cursor currently positioned at pivot_doc
-            group_end = pivot + 1
-            while group_end < len(active) and active[group_end].cur_doc == pivot_doc:
-                group_end += 1
-            group = active[:group_end]
-            next_doc = active[group_end].cur_doc if group_end < len(active) else _INF
-            bm = sum(c.block_upper_bound() for c in group)
-            if bm < th:
-                # no doc in [pivot_doc, min block_last] can beat θ from
-                # these cursors, and later cursors start at next_doc
-                target = min(min(c.current_block_last() for c in group) + 1, next_doc)
-                target = max(target, pivot_doc + 1)
-                for c in group:
-                    c.advance_to(target)
-            else:
-                score = sum(c.score_current() for c in group)
-                entry = (score, -pivot_doc)
-                if len(heap) < k:
-                    heapq.heappush(heap, entry)
-                elif entry > heap[0]:
-                    heapq.heapreplace(heap, entry)
-                for c in group:
-                    c.advance()
-        else:
-            # move lagging cursors up to the pivot document
-            for c in active[:pivot]:
-                if c.cur_doc < pivot_doc:
-                    c.advance_to(pivot_doc)
-    out = sorted(((-nd, s) for s, nd in heap), key=lambda x: (-x[1], x[0]))
-    return [(doc, s) for doc, s in out]
 
 
 def project_results(

@@ -70,11 +70,11 @@ def _work_full(lo: int, hi: int, tmpdir: str) -> int:
     import pyarrow as pa
 
     from pyfusedb_spark import fsio
-    from pyfusedb_spark.functions.udfs import _get_analyzer, make_packed_tf_exploder
+    from pyfusedb_spark.functions.udfs import _get_analyzer, make_run_packer
     from pyfusedb_spark.sources.corpus import _gen_rows
 
     n_tparts = 64
-    packer = make_packed_tf_exploder(PRESET, 250_000, "content", n_tparts, 4)
+    pack_batch = make_run_packer(250_000, n_tparts, 4)
     analyze = _get_analyzer(PRESET).analyze
     pid = os.getpid()
     writers = {}
@@ -94,7 +94,7 @@ def _work_full(lo: int, hi: int, tmpdir: str) -> int:
                 compression="snappy",
             )
         sha_writer.write_table(sha_tbl)
-        rb = packer.pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
+        rb = pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
         if rb is None:
             continue
         tps = np.asarray(rb.column("tpart").to_numpy(zero_copy_only=False))

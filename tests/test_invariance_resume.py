@@ -2,11 +2,14 @@
 
 - results identical under different input partitioning and bucket/salt
   counts;
-- a killed build (simulated by deleting a committed bucket segment)
-  resumes by rebuilding ONLY the missing unit, and the resumed index is
-  identical to a fresh build.
+- a killed build (simulated by deleting a committed tpart unit, or only
+  a stage manifest) resumes by rebuilding ONLY the missing unit, and the
+  resumed index is identical to a fresh build;
+- a root whose tf stage has no tpart layout is refused, not resumed.
 """
 
+import glob
+import json
 import os
 import shutil
 
@@ -50,54 +53,16 @@ def test_invariance_under_partitioning_and_salt(spark, tmp_path):
         np.testing.assert_allclose([s for _, s in ra], [s for _, s in rb], atol=1e-9)
 
 
-def test_kill_resume(spark, tmp_path):
-    """Per-bucket posting mode: the resume unit is one doc-range bucket
-    segment (file-shuffle's per-tpart analog is tested below)."""
-    corpus = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
-    )
-    out = str(tmp_path / "resume")
-    cfg = IndexConfig(n_buckets=4, shuffle_partitions=4, posting_mode="per-bucket")
-    build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
-    idx = FuseIndex(spark, out)
-    before = _search_all(idx)
-
-    # simulate a kill after bucket=1 was lost: remove its data + manifest
-    shutil.rmtree(os.path.join(out, "index", "bucket=1"))
-    os.remove(os.path.join(out, "_manifests", "bucket=1.json"))
-    # lexicon depends on every bucket -> drop its manifest too
-    os.remove(os.path.join(out, "_manifests", "stage_lexicon.json"))
-
-    # record mtimes of the untouched committed segments
-    untouched = {}
-    for b in (0, 2, 3):
-        d = os.path.join(out, "index", f"bucket={b}")
-        untouched[b] = max(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d))
-
-    build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg, resume=True)
-
-    for b, mtime in untouched.items():
-        d = os.path.join(out, "index", f"bucket={b}")
-        assert max(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)) == mtime, (
-            f"bucket {b} was rebuilt but should have been skipped"
-        )
-    after = _search_all(FuseIndex(spark, out))
-    assert before == after
-
-
 def test_kill_resume_file_shuffle(spark, tmp_path):
     """File-shuffle posting mode: the resume unit is one TPART (a term-
     hash slice spanning every bucket). Deleting one tpart's slices +
     manifest must rebuild exactly that tpart and leave the other tparts'
     files untouched, and the resumed index must answer identically."""
-    import glob
-
     corpus = spark.createDataFrame(
         [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
     )
     out = str(tmp_path / "resume_fs")
-    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4,
-                      posting_mode="file-shuffle")
+    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4)
     build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
     idx = FuseIndex(spark, out)
     before = _search_all(idx)
@@ -133,16 +98,70 @@ def test_kill_resume_file_shuffle_masked_stage_manifest(spark, tmp_path):
         [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
     )
     out = str(tmp_path / "resume_fs2")
-    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4,
-                      posting_mode="file-shuffle")
+    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4)
     build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
     before = _search_all(FuseIndex(spark, out))
-    import glob
-
     for d in glob.glob(os.path.join(out, "index", "bucket=*", "tpart=2")):
         shutil.rmtree(d)  # data gone, manifests (incl. stage) all intact
     build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg, resume=True)
     assert _search_all(FuseIndex(spark, out)) == before
+
+
+def _parquet_mtimes(out: str) -> dict:
+    return {
+        p: os.path.getmtime(p)
+        for sub in ("index", "lexicon")
+        for p in glob.glob(os.path.join(out, sub, "**", "*.parquet"), recursive=True)
+    }
+
+
+def test_resume_rederives_missing_stage_lexicon(spark, tmp_path):
+    """A crash after the stage_postings commit but before stage_lexicon's
+    resumes from the committed tpart manifests alone: the same
+    vocabulary/n_postings, no chunk or lexicon file rewritten, and the
+    same search results."""
+    corpus = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
+    )
+    out = str(tmp_path / "resume_lex")
+    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4)
+    first = build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
+    before = _search_all(FuseIndex(spark, out))
+    mtimes = _parquet_mtimes(out)
+    assert mtimes, "expected chunk and lexicon files"
+
+    os.remove(os.path.join(out, "_manifests", "stage_lexicon.json"))
+    again = build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg, resume=True)
+
+    assert (again["vocabulary"], again["n_postings"]) == (
+        first["vocabulary"], first["n_postings"])
+    assert os.path.exists(os.path.join(out, "_manifests", "stage_lexicon.json"))
+    assert _parquet_mtimes(out) == mtimes, "a resume rewrote index/lexicon files"
+    assert _search_all(FuseIndex(spark, out)) == before
+
+
+def test_resume_refuses_pre_tpart_stage_tf(spark, tmp_path):
+    """A stage_tf manifest without n_tparts is the layout the retired
+    live-exchange posting modes wrote: build_index refuses it, resumed
+    or not, instead of mixing layouts."""
+    corpus = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
+    )
+    out = str(tmp_path / "legacy")
+    cfg = IndexConfig(n_buckets=2, compute_norms=False)
+    build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
+    path = os.path.join(out, "_manifests", "stage_tf.json")
+    with open(path) as f:
+        m = json.load(f)
+    m.pop("n_tparts")
+    m.pop("tpart_spread")
+    with open(path, "w") as f:
+        json.dump(m, f)
+    for resume in (True, False):
+        with pytest.raises(ValueError, match="fresh directory"):
+            build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg,
+                        resume=resume)
+    assert os.path.exists(path), "the refusal must not uncommit anything"
 
 
 def test_tpart_crc32_parity(spark):

@@ -69,16 +69,24 @@ def test_stats_match_oracle(pangram_index, pangram_oracle):
 @pytest.mark.parametrize("query", QUERY_SET)
 def test_rank_identity_bm25(pangram_index, pangram_oracle, query):
     expect = pangram_oracle.search_bm25(query, 10)
-    got_wand = pangram_index.search(query, 10, mode="bm25", use_wand=True)
+    got_bmx = pangram_index.search(query, 10, mode="bm25", use_wand="bmx")
     got_exh = pangram_index.search(query, 10, mode="bm25", use_wand=False)
-    assert [d for d, _ in got_wand] == [d for d, _ in expect]
+    assert [d for d, _ in got_bmx] == [d for d, _ in expect]
     assert [d for d, _ in got_exh] == [d for d, _ in expect]
     np.testing.assert_allclose(
-        [s for _, s in got_wand], [s for _, s in expect], atol=1e-9
+        [s for _, s in got_bmx], [s for _, s in expect], atol=1e-9
     )
     np.testing.assert_allclose(
         [s for _, s in got_exh], [s for _, s in expect], atol=1e-9
     )
+
+
+@pytest.mark.parametrize("use_wand", [True, "wand", "exhaustive", None])
+def test_search_rejects_unknown_use_wand(pangram_index, use_wand):
+    """Only "auto", "bmx" and False select a scorer; anything else is
+    refused instead of silently picking one."""
+    with pytest.raises(ValueError, match="use_wand"):
+        pangram_index.search("quick fox", 10, use_wand=use_wand)
 
 
 @pytest.mark.parametrize("query", QUERY_SET)
@@ -182,7 +190,7 @@ def test_chunk_cache_hits_and_stays_correct(pangram_index, monkeypatch):
     assert idx.last_search_stats["chunk_cache_misses"] == 0
     assert idx.last_search_stats["decoded_postings"] == 0
     assert first == second
-    for use_wand in (False, "bmx", True):
+    for use_wand in (False, "bmx"):
         got = idx.search(q, 10, use_wand=use_wand)
         assert [d for d, _ in got] == [d for d, _ in first], use_wand
         np.testing.assert_allclose([s for _, s in got], [s for _, s in first], atol=1e-12)

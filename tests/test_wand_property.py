@@ -1,7 +1,8 @@
-"""Property test: block-max WAND == exhaustive scoring (SURVEY.md §7.4
-"verify pruning ≡ exhaustive scoring"). Pure numpy/pandas — no Spark —
-so it can hammer many randomized cases cheaply, including heavy ties
-(identical tf/dl everywhere) where tie-break pruning bugs hide."""
+"""Property tests: the block-max driver scorer ("bmx") and the scorer
+routing == exhaustive scoring (SURVEY.md §7.4 "verify pruning ≡
+exhaustive scoring"). Pure numpy/pandas — no Spark — so they can hammer
+many randomized cases cheaply, including heavy ties (identical tf/dl
+everywhere) where tie-break pruning bugs hide."""
 
 import math
 
@@ -10,16 +11,14 @@ import pandas as pd
 import pytest
 
 from pyfusedb_spark.functions import codec
-from pyfusedb_spark.operators.query import TermCursor, TermPostings, wand_topk
+from pyfusedb_spark.operators.query import TermPostings
 from pyfusedb_spark.oracle import bm25_idf, bm25_partial
 
 K1, B = 1.2, 0.75
 
 
-def _make_chunks(rng, n_docs, df, avgdl, dls, block_size, n_buckets=3):
-    """Posting list for one term split into doc-range bucket chunks."""
-    doc_ids = np.sort(rng.choice(n_docs, size=df, replace=False))
-    tfs = rng.integers(1, 8, size=df)
+def _chunks_for(doc_ids, tfs, n_docs, avgdl, dls, block_size, n_buckets=3):
+    """One term's (sorted) postings split into doc-range bucket chunks."""
     span = math.ceil(n_docs / n_buckets)
     rows = []
     for b in range(n_buckets):
@@ -39,7 +38,15 @@ def _make_chunks(rng, n_docs, df, avgdl, dls, block_size, n_buckets=3):
                 max_partial=ch.max_partial,
             )
         )
-    return pd.DataFrame(rows), doc_ids, tfs
+    return pd.DataFrame(rows)
+
+
+def _make_chunks(rng, n_docs, df, avgdl, dls, block_size, n_buckets=3):
+    """Random posting list for one term, as bucket chunks."""
+    doc_ids = np.sort(rng.choice(n_docs, size=df, replace=False))
+    tfs = rng.integers(1, 8, size=df)
+    chunks = _chunks_for(doc_ids, tfs, n_docs, avgdl, dls, block_size, n_buckets)
+    return chunks, doc_ids, tfs
 
 
 def _exhaustive(term_data, dls, avgdl, n_docs, k):
@@ -51,50 +58,6 @@ def _exhaustive(term_data, dls, avgdl, n_docs, k):
     return out[:k]
 
 
-@pytest.mark.parametrize("seed", range(12))
-def test_wand_equals_exhaustive_random(seed):
-    rng = np.random.default_rng(seed)
-    n_docs = int(rng.integers(50, 2000))
-    n_terms = int(rng.integers(1, 6))
-    k = int(rng.choice([1, 3, 10, 50]))
-    block_size = int(rng.choice([4, 16, 128]))
-    dls = rng.integers(5, 500, size=n_docs)
-    avgdl = float(dls.mean())
-    cursors, term_data = [], []
-    for _t in range(n_terms):
-        df = int(rng.integers(1, n_docs))
-        chunks, doc_ids, tfs = _make_chunks(rng, n_docs, df, avgdl, dls, block_size)
-        qtf = int(rng.integers(1, 3))
-        qw = qtf * bm25_idf(df, n_docs)
-        postings = TermPostings.from_chunks(chunks, block_size, avgdl, K1, B)
-        cursors.append(TermCursor(postings, qw))
-        term_data.append(((doc_ids, tfs), qw))
-    got = wand_topk(cursors, k)
-    expect = _exhaustive(term_data, dls, avgdl, n_docs, k)
-    assert [d for d, _ in got] == [d for d, _ in expect]
-    np.testing.assert_allclose([s for _, s in got], [s for _, s in expect], atol=1e-9)
-
-
-def test_wand_heavy_ties():
-    """All docs identical tf/dl -> all scores equal: pruning must not drop
-    the lowest doc_ids (the (-score, doc_id) tie-break)."""
-    n_docs, df, k = 500, 400, 10
-    rng = np.random.default_rng(0)
-    dls = np.full(n_docs, 100, dtype=np.int64)
-    doc_ids = np.sort(rng.choice(n_docs, size=df, replace=False))
-    tfs = np.ones(df, dtype=np.int64)
-    ch = codec.encode_postings(doc_ids, tfs, dls[doc_ids], 100.0, K1, B, 16)
-    chunks = pd.DataFrame([dict(
-        term="t", bucket=0, df_chunk=df, payload=ch.payload,
-        block_offsets=ch.block_offsets.tolist(), block_first=ch.block_first.tolist(),
-        block_last=ch.block_last.tolist(), block_max_partial=ch.block_max_partial.tolist(),
-        max_partial=ch.max_partial)])
-    qw = bm25_idf(df, n_docs)
-    got = wand_topk([TermCursor(TermPostings.from_chunks(chunks, 16, 100.0, K1, B), qw)], k)
-    # ties broken by ascending doc_id -> exactly the k smallest matching ids
-    assert [d for d, _ in got] == doc_ids[:k].tolist()
-
-
 class _BmxStub:
     """Minimal FuseIndex stand-in for driving _blockmax_vectorized."""
 
@@ -102,6 +65,8 @@ class _BmxStub:
 
     _dense_id_bound = _FI._dense_id_bound
     _blockmax_vectorized = _FI._blockmax_vectorized
+    _exhaustive = _FI._exhaustive
+    _score = _FI._score
     _hot_cut = staticmethod(_FI._hot_cut)
 
     def __init__(self, n_docs, avgdl, block_size):
@@ -150,3 +115,73 @@ def test_bmx_equals_exhaustive_random(seed):
     assert [d for d, _ in got] == [d for d, _ in expect]
     np.testing.assert_allclose([s for _, s in got], [s for _, s in expect], atol=1e-9)
     assert stub.last_search_stats["path"] == "bmx"
+
+
+@pytest.mark.parametrize("seed", range(12))
+def test_wand_equals_exhaustive_random(seed):
+    """Every accepted ``use_wand`` value routed through ``_score``
+    ("auto", forced "bmx" with its exhaustive fallback, and False) is
+    rank-identical to the reference accumulation on random shapes: 1-5
+    terms of any df, so both the pruned and the fallback routes run."""
+    rng = np.random.default_rng(seed)
+    n_docs = int(rng.integers(50, 2000))
+    n_terms = int(rng.integers(1, 6))
+    k = int(rng.choice([1, 3, 10, 50]))
+    block_size = int(rng.choice([4, 16, 128]))
+    dls = rng.integers(5, 500, size=n_docs)
+    avgdl = float(dls.mean())
+    postings, term_data, terms, q_tfs, dfs = {}, [], [], {}, {}
+    for i in range(n_terms):
+        name = f"t{i}"
+        df = int(rng.integers(1, n_docs))
+        chunks, doc_ids, tfs = _make_chunks(rng, n_docs, df, avgdl, dls, block_size)
+        qtf = int(rng.integers(1, 3))
+        postings[name] = TermPostings.from_chunks(chunks, block_size, avgdl, K1, B)
+        term_data.append(((doc_ids, tfs), qtf * bm25_idf(df, n_docs)))
+        terms.append(name)
+        q_tfs[name] = qtf
+        dfs[name] = df
+    expect = _exhaustive(term_data, dls, avgdl, n_docs, k)
+    stub = _BmxStub(n_docs, avgdl, block_size)
+    for use_wand in ("auto", "bmx", False):
+        got = stub._score(postings, terms, q_tfs, dfs, k, "bm25", False, use_wand)
+        assert [d for d, _ in got] == [d for d, _ in expect], use_wand
+        np.testing.assert_allclose(
+            [s for _, s in got], [s for _, s in expect], atol=1e-9
+        )
+        assert stub.last_search_stats["path"] in ("bmx", "exhaustive")
+
+
+def test_wand_heavy_ties():
+    """bmx under heavy ties: one hot term with identical tf/dl in every
+    doc plus one rare term inside the hot docs, so every doc of each term
+    set scores the same. Pruning must not drop the lowest doc ids of a
+    tie (the (-score, doc_id) order): the top-k is the rare docs in id
+    order, then the lowest hot-only ids. Covers both a finite rare-only
+    threshold (k <= rare df: every hot block is skipped, then the cover
+    pass completes the candidates) and an infinite one (k > rare df)."""
+    n_docs, hot_df, block_size = 500, 400, 16
+    rng = np.random.default_rng(0)
+    dls = np.full(n_docs, 100, dtype=np.int64)
+    hot_ids = np.sort(rng.choice(n_docs, size=hot_df, replace=False))
+    for k, rare_df in ((5, 20), (10, 8)):
+        rare_ids = np.sort(rng.choice(hot_ids, size=rare_df, replace=False))
+        postings, term_data, q_tfs, dfs = {}, [], {}, {}
+        for name, ids in (("hot", hot_ids), ("rare", rare_ids)):
+            tfs = np.ones(ids.size, dtype=np.int64)
+            chunks = _chunks_for(ids, tfs, n_docs, 100.0, dls, block_size)
+            postings[name] = TermPostings.from_chunks(chunks, block_size, 100.0, K1, B)
+            term_data.append(((ids, tfs), bm25_idf(ids.size, n_docs)))
+            q_tfs[name] = 1
+            dfs[name] = int(ids.size)
+        stub = _BmxStub(n_docs, 100.0, block_size)
+        got = stub._blockmax_vectorized(postings, ["hot", "rare"], q_tfs, dfs, k)
+        st = stub.last_search_stats
+        assert st["path"] == "bmx"
+        if k <= rare_df:  # the finite threshold really prunes hot blocks
+            assert st["hot_blocks_skipped"] > 0
+        expect = _exhaustive(term_data, dls, 100.0, n_docs, k)
+        hot_only = np.setdiff1d(hot_ids, rare_ids)
+        assert [d for d, _ in got] == [d for d, _ in expect]
+        assert [d for d, _ in got] == np.concatenate([rare_ids, hot_only])[:k].tolist()
+        np.testing.assert_allclose([s for _, s in got], [s for _, s in expect], atol=1e-9)
