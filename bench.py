@@ -356,31 +356,6 @@ def main() -> None:
     extras["build_docs_per_sec"] = round(n_docs / timings["build_index"], 1)
     idx = FuseIndex(spark, idx_dir)
 
-    # ---- same build with DuckDB blocked: the manifest/stats path a real
-    # multi-executor cluster takes (driver-local duckdb shortcuts only
-    # exist for toy-scale scheduling latency). sys.modules poisoning makes
-    # `import duckdb` raise inside build_index, mirroring
-    # tests/test_build_spark_fallback.py. ----
-    _SENTINEL = object()
-    saved_duckdb = sys.modules.get("duckdb", _SENTINEL)
-    sys.modules["duckdb"] = None
-    try:
-        sp_dir = os.path.join(tempfile.gettempdir(), f"pyfusedb_bench_idx_sp_{cpus}")
-        shutil.rmtree(sp_dir, ignore_errors=True)
-        t0 = time.perf_counter()
-        build_index(
-            spark, docs, sp_dir, content_col="text", doc_id_col="doc_id",
-            config=IndexConfig(preset="simple", n_buckets=4, shuffle_partitions=cpus),
-            resume=False,
-        )
-        timings["build_index_sparkpath"] = round(time.perf_counter() - t0, 3)
-    finally:
-        if saved_duckdb is _SENTINEL:
-            sys.modules.pop("duckdb", None)
-        else:
-            sys.modules["duckdb"] = saved_duckdb
-        shutil.rmtree(sp_dir, ignore_errors=True)
-
     # ---- BM25 / TF-IDF query latency (driver WAND path), median of 5 ----
     timings["q_bm25_hot"] = _med(lambda: idx.search("join", 10))
     timings["q_bm25_multi"] = _med(lambda: idx.search("merge sort join", 10))

@@ -105,10 +105,10 @@ def term_tpart_probe(term: str, n_tparts: int, spread: int) -> list[int]:
 
 
 def make_run_packer(bucket_span: int, n_tparts: int, tpart_spread: int):
-    """Returns ``pack_batch(ids, counters)``: one Arrow batch of corpus
-    rows (doc ids + per-doc term Counters) -> PACKED per-(term,bucket)
-    partial posting runs, one row per distinct (term, bucket), or None
-    for a batch with no terms.
+    """Returns ``pack_batch(ids, counters, lens)``: one Arrow batch of
+    corpus rows (doc ids, per-doc term Counters and per-doc token
+    counts) -> PACKED per-(term,bucket) partial posting runs, one row
+    per distinct (term, bucket), or None for a batch with no terms.
 
     This is the SPIMI map-side partial posting list (north star: partial
     lists built BEFORE the term-partitioned exchange): the tf files then
@@ -140,8 +140,7 @@ def make_run_packer(bucket_span: int, n_tparts: int, tpart_spread: int):
         ]
     )
 
-    def pack_batch(ids: np.ndarray, counters: list) -> "pa.RecordBatch | None":
-        lens = np.fromiter((sum(c.values()) for c in counters), np.int64, len(counters))
+    def pack_batch(ids: np.ndarray, counters: list, lens: np.ndarray) -> "pa.RecordBatch | None":
         reps = np.fromiter((len(c) for c in counters), np.int64, len(counters))
         ntot = int(reps.sum())
         if ntot == 0:
@@ -208,6 +207,10 @@ TF_TASK_SCHEMA = T.StructType(
     [
         T.StructField("pid", T.IntegerType(), False),
         T.StructField("n_docs", T.LongType(), False),
+        T.StructField("total_len", T.LongType(), False),
+        # Σ int(sha256[:15], 16) over the task's docs as a decimal
+        # string: a sum of 60-bit prefixes overflows int64 past ~8 docs
+        T.StructField("lineage", T.StringType(), False),
     ]
 )
 
@@ -218,7 +221,7 @@ def make_tf_fused_task(
     content_col: str,
     n_tparts: int,
     staging_tf: str,
-    staging_sha: str,
+    staging_ds: str,
     tpart_spread: int = 1,
 ):
     """Fused map-side stage for the file-shuffle build: ONE corpus scan
@@ -226,7 +229,11 @@ def make_tf_fused_task(
     and writes BOTH outputs itself with pyarrow —
 
       staging_tf/tpart=P/part-<pid>.parquet   packed runs (hive tpart)
-      staging_sha/part-<pid>.parquet          (doc_id, sha256)
+      staging_ds/part-<pid>.parquet           doc_stats (doc_id, doc_len, sha256)
+
+    and yields one TF_TASK_SCHEMA row (doc count, token count, lineage
+    sum) — the driver sums these into the stage stats, so no later job
+    re-reads either output to find them.
 
     This is the map side of a classic shuffle-file exchange, expressed
     as parquet: each task keeps one open ParquetWriter per tpart (one
@@ -241,7 +248,10 @@ def make_tf_fused_task(
     pack_batch = make_run_packer(bucket_span, n_tparts, tpart_spread)
     import pyarrow as pa
 
-    out_schema = pa.schema([("pid", pa.int32()), ("n_docs", pa.int64())])
+    out_schema = pa.schema(
+        [("pid", pa.int32()), ("n_docs", pa.int64()),
+         ("total_len", pa.int64()), ("lineage", pa.string())]
+    )
 
     def run(batches):
         import hashlib
@@ -254,8 +264,10 @@ def make_tf_fused_task(
         az = _get_analyzer(preset)
         analyze = az.analyze
         writers: dict[int, fsio.AtomicParquetWriter] = {}
-        sha_writer = None
+        ds_writer = None
         ndocs = 0
+        total_len = 0
+        lineage = 0
         for batch in batches:
             if not batch.num_rows:
                 continue
@@ -264,18 +276,24 @@ def make_tf_fused_task(
             shas = [
                 hashlib.sha256((c or "").encode("utf-8")).hexdigest() for c in contents
             ]
-            sha_tbl = pa.table(
-                {"doc_id": pa.array(ids, pa.int64()), "sha256": pa.array(shas, pa.string())}
+            counters = [Counter(analyze(c or "")) for c in contents]
+            lens = np.fromiter((sum(c.values()) for c in counters), np.int64, len(counters))
+            ds_tbl = pa.table(
+                {"doc_id": pa.array(ids, pa.int64()),
+                 "doc_len": pa.array(lens, pa.int64()),
+                 "sha256": pa.array(shas, pa.string())}
             )
-            if sha_writer is None:
-                fsio.makedirs(staging_sha)
-                sha_writer = fsio.AtomicParquetWriter(
-                    fsio.join(staging_sha, f"part-{pid:05d}.parquet"),
-                    sha_tbl.schema, compression="snappy",
+            if ds_writer is None:
+                fsio.makedirs(staging_ds)
+                ds_writer = fsio.AtomicParquetWriter(
+                    fsio.join(staging_ds, f"part-{pid:05d}.parquet"),
+                    ds_tbl.schema, compression="snappy",
                 )
-            sha_writer.write_table(sha_tbl)
+            ds_writer.write_table(ds_tbl)
             ndocs += len(ids)
-            rb = pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
+            total_len += int(lens.sum())
+            lineage += sum(int(h[:15], 16) for h in shas)
+            rb = pack_batch(ids, counters, lens)
             if rb is None:
                 continue
             tps = np.asarray(rb.column("tpart").to_numpy(zero_copy_only=False))
@@ -295,10 +313,11 @@ def make_tf_fused_task(
                 w.write_table(sub)
         for w in writers.values():
             w.close()
-        if sha_writer is not None:
-            sha_writer.close()
+        if ds_writer is not None:
+            ds_writer.close()
         yield pa.RecordBatch.from_arrays(
-            [pa.array([pid], pa.int32()), pa.array([ndocs], pa.int64())],
+            [pa.array([pid], pa.int32()), pa.array([ndocs], pa.int64()),
+             pa.array([total_len], pa.int64()), pa.array([str(lineage)], pa.string())],
             schema=out_schema,
         )
 

@@ -10,11 +10,14 @@ Stage "tf"      ONE fused corpus scan (udfs.make_tf_fused_task):
                 single mapInArrow pass; each task writes its packed
                 partial posting runs straight into hive
                 ``tf/tpart=P`` dirs (P = bucket-salted crc32 of the
-                term) plus its (doc_id, sha256) file — the MAP side of
-                a shuffle, expressed as parquet files, with no JVM
-                row materialization and no second scan.
+                term) plus its doc_stats (doc_id, doc_len, sha256)
+                file — the MAP side of a shuffle, expressed as parquet
+                files, with no JVM row materialization and no second
+                scan.
 Stage "stats"   N (counts empty docs too — app/InvertedIndex.py:34),
-                avgdl, exact sha256 lineage sum.
+                avgdl, total_len, exact sha256 lineage sum: summed on
+                the driver from the rows the scan tasks return, with no
+                read-back of what they wrote.
 Stage postings  spark.range(n_tparts) -> one encoder task per tpart
                 (udfs.make_tpart_build_task): reads ITS OWN tpart's
                 files via pyarrow (the REDUCE side — no live
@@ -53,10 +56,12 @@ here; HDFS/S3 via pyarrow.fs on a cluster).
 from __future__ import annotations
 
 import math
-import os
 import time
 from dataclasses import asdict, dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -129,25 +134,12 @@ def _default_n_tparts(n_docs: int, parallelism: int) -> int:
     return max(1, min(math.ceil(n_docs / DOCS_PER_TPART), 4 * parallelism))
 
 
-def _local_agg(sql: str) -> dict:
-    """Driver-local parquet aggregation via DuckDB — replaces read-back
-    Spark jobs for manifest stats (each saved job is ~0.5-1.5s of serial
-    scheduling latency at toy scale; at cluster scale use the Spark
-    path). Falls back to None when duckdb is unavailable."""
-    if "://" in sql:
-        return None  # URI root (object store / file://): take the Spark path
-    try:
-        import duckdb  # noqa: PLC0415
-    except ImportError:
-        return None
-    pdf = duckdb.sql(sql).df()
-    return {c: pdf[c].iloc[0] for c in pdf.columns}
-
-
 def _tf_long(spark: SparkSession, tf_dir: str) -> DataFrame:
-    """Long-format (term, doc_id, tf, dl) view over the packed tf runs."""
+    """Long-format (term, doc_id, tf, dl) view over the packed tf runs
+    (schema given, not inferred: an empty corpus leaves no tf file)."""
     return (
-        spark.read.parquet(tf_dir)
+        spark.read.schema("term string, docs array<bigint>, tfs array<int>, dls array<int>")
+        .parquet(tf_dir)
         .select("term", F.explode(F.arrays_zip("docs", "tfs", "dls")).alias("z"))
         .select(
             "term",
@@ -155,46 +147,6 @@ def _tf_long(spark: SparkSession, tf_dir: str) -> DataFrame:
             F.col("z.tfs").alias("tf"),
             F.col("z.dls").alias("dl"),
         )
-    )
-
-
-def _assemble_doc_stats(spark: SparkSession, ds_sha_dir: str, tf_dir: str, ds_dir: str) -> None:
-    """doc_stats(doc_id, doc_len, sha256) = sha ⟕ max(doc_len) per doc.
-
-    Driver-local DuckDB at toy scale (saves two Spark jobs of scheduling
-    latency); Spark left-join fallback — the path a real cluster takes."""
-    try:
-        if fsio.is_uri(ds_dir):
-            raise OSError("URI root: use the Spark path")
-        import duckdb  # noqa: PLC0415
-
-        os.makedirs(ds_dir, exist_ok=True)
-        for old in os.listdir(ds_dir):
-            if old.endswith(".parquet"):
-                os.remove(os.path.join(ds_dir, old))
-        duckdb.sql(
-            f"COPY (SELECT s.doc_id, coalesce(l.doc_len, 0)::BIGINT AS doc_len, s.sha256 "
-            f"FROM '{ds_sha_dir}/*.parquet' s LEFT JOIN ("
-            f"  SELECT doc_id, max(dl)::BIGINT AS doc_len FROM ("
-            f"    SELECT unnest(docs) AS doc_id, unnest(dls) AS dl FROM '{tf_dir}/*/*.parquet'"
-            f"  ) GROUP BY doc_id"
-            f") l USING (doc_id)) TO '{ds_dir}/part-00000.parquet' (FORMAT PARQUET)"
-        )
-        return
-    except Exception:
-        pass
-    sha = spark.read.parquet(ds_sha_dir)
-    lens = (
-        _tf_long(spark, tf_dir)
-        .groupBy("doc_id")
-        .agg(F.max("dl").cast("long").alias("doc_len"))
-    )
-    (
-        sha.join(lens, "doc_id", "left")
-        .na.fill({"doc_len": 0})
-        .select("doc_id", "doc_len", "sha256")
-        .write.mode("overwrite")
-        .parquet(ds_dir)
     )
 
 
@@ -206,33 +158,6 @@ def _tpart_committed(cat: ManifestCatalog, tp: int) -> bool:
     if m is None:
         return False
     return all(fsio.isdir(d) for d in m.get("data_dirs", []))
-
-
-def _lexicon_vocab_exact(spark: SparkSession, lex_dir: str) -> int:
-    """Distinct-term count over the lexicon slices. With bucket-salted
-    routing (tpart_spread > 1) a term's lexicon rows span up to `spread`
-    slices, so per-slice row counts over-count; one narrow distinct over
-    the (small) lexicon fixes it. DuckDB locally, Spark fallback."""
-    if fsio.is_uri(lex_dir):
-        return (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(lex_dir).select("term").distinct().count()
-        )
-    import glob as _g
-
-    files = sorted(
-        _g.glob(os.path.join(lex_dir, "*.parquet"))
-        + _g.glob(os.path.join(lex_dir, "*", "*.parquet"))
-    )
-    if not files:
-        return 0
-    flist = ", ".join(f"'{f}'" for f in files)
-    row = _local_agg(
-        f"SELECT count(DISTINCT term)::BIGINT AS v FROM read_parquet([{flist}])"
-    )
-    if row is not None:
-        return int(row["v"])
-    return spark.read.parquet(*files).select("term").distinct().count()
 
 
 def _file_shuffle_postings(
@@ -395,9 +320,16 @@ def _file_shuffle_postings(
             n.endswith(".parquet") or n.startswith("tpart=")
             for n in fsio.listdir(lex_dir)
         ):
-            _write_empty_lexicon(lex_dir)
+            _write_empty(lex_dir, pa.schema(
+                [("term", pa.string()), ("df", pa.int64()), ("total_tf", pa.int64()),
+                 ("max_partial", pa.float32()), ("n_chunks", pa.int64())]
+            ))
         if tpart_spread > 1 and lex_terms:
-            lex_terms = _lexicon_vocab_exact(spark, lex_dir)
+            # bucket-salted routing puts a term's lexicon rows in up to
+            # `spread` slices and no tpart task can see the others, so
+            # the exact vocabulary is one distinct over the term column
+            terms = pads.dataset(lex_dir, format="parquet").to_table(columns=["term"])
+            lex_terms = pc.count_distinct(terms.column("term")).as_py()
         for k in sorted(by_bucket):
             agg = by_bucket[k]
             cat.commit(
@@ -432,22 +364,11 @@ def _file_shuffle_postings(
         )
 
 
-def _write_empty_lexicon(lex_dir: str) -> None:
+def _write_empty(out: str, schema: pa.Schema) -> None:
     """Empty-corpus edge: downstream readers need at least one parquet
-    file with the lexicon schema."""
-    import pyarrow as pa
-
-    fsio.makedirs(lex_dir)
-    empty = pa.table(
-        {
-            "term": pa.array([], pa.string()),
-            "df": pa.array([], pa.int64()),
-            "total_tf": pa.array([], pa.int64()),
-            "max_partial": pa.array([], pa.float32()),
-            "n_chunks": pa.array([], pa.int64()),
-        }
-    )
-    fsio.write_parquet_atomic(empty, fsio.join(lex_dir, "part-0.parquet"))
+    file with the output's schema."""
+    fsio.makedirs(out)
+    fsio.write_parquet_atomic(schema.empty_table(), fsio.join(out, "part-0.parquet"))
 
 
 def build_index(
@@ -490,12 +411,17 @@ def build_index(
             "build_index can no longer resume or overwrite — build into a "
             "fresh directory"
         )
-    # drop staging dirs a killed run left behind: they'd match the
-    # `dir/*/*.parquet` lexicon/stats globs and double-count chunks
+    # drop staging dirs a killed run left behind: directory-listing
+    # readers (query side, lexicon distinct) would double-count chunks
     cat.clean_orphan_staging(out_dir)
     if not resume:
         for key in list(cat.snapshot().get("manifests", {})):
             cat.uncommit(key)
+    # stage stats is committed from the scan's own task rows just before
+    # stage tf; a stage tf without it re-runs the scan (nothing reads the
+    # scan's output back to recover the stats)
+    m_stats = cat.read_manifest("stage_stats")
+    if m_stats is None:
         m_tf = None
 
     tf_dir = fsio.join(out_dir, "tf")
@@ -503,20 +429,20 @@ def build_index(
     idx_dir = fsio.join(out_dir, "index")
     lex_dir = fsio.join(out_dir, "lexicon")
 
-    # ---------------- stage tf ----------------
+    # ---------------- stage tf + stage stats ----------------
     # Narrow jobs only, zero live shuffles, no caching of wide
     # intermediates (a persisted map<term,tf> column measured 2-3x
     # slower end-to-end and its fixed JVM-side costs wrecked N->4N
     # scaling):
     #   A. ONE fused corpus scan (udfs.make_tf_fused_task): the task
-    #      tokenizes, packs runs into tf/tpart=P files AND writes the
-    #      (doc_id, sha256) lineage file — no second scan for sha256 and
-    #      no Spark dynamic-partition writer fanning out fat array rows;
+    #      tokenizes, packs runs into tf/tpart=P files AND writes its
+    #      doc_stats (doc_id, doc_len, sha256) file — no second scan for
+    #      sha256 and no Spark dynamic-partition writer fanning out fat
+    #      array rows;
     #   B. an optional per-tpart combine pass bounding tf file fan-out;
-    #   C. doc_stats = sha ⟕ per-doc doc_len — tiny driver-local DuckDB
-    #      agg over the two parquet dirs (Spark fallback for real
-    #      clusters / non-local filesystems).
-    ds_sha_dir = fsio.join(out_dir, "doc_sha")
+    #   C. stage stats = the sum of the scan's task rows (N counts empty
+    #      docs too — app/InvertedIndex.py:34; total_len; the order-
+    #      independent sha256 lineage sum of 60-bit hex prefixes).
     if m_tf is None:
         t0 = time.perf_counter()
         if doc_id_col is None:
@@ -561,15 +487,15 @@ def build_index(
             or spark.sparkContext.defaultParallelism,
         )
         staging_tf = cat.staging_dir(tf_dir)
-        staging_sha = cat.staging_dir(ds_sha_dir)
+        staging_ds = cat.staging_dir(ds_dir)
         fsio.makedirs(staging_tf)
-        fsio.makedirs(staging_sha)
+        fsio.makedirs(staging_ds)
         scan_rows = docs.select(
             F.col("doc_id").cast("long").alias("doc_id"), content_col
         ).mapInArrow(
             make_tf_fused_task(
                 config.preset, bucket_span, content_col,
-                n_tparts_cfg, staging_tf, staging_sha,
+                n_tparts_cfg, staging_tf, staging_ds,
                 tpart_spread=config.n_buckets,
             ),
             TF_TASK_SCHEMA,
@@ -587,13 +513,25 @@ def build_index(
             ).collect()
             fsio.rmtree(staging_tf)
             staging_tf = combined
+        if not n_docs:
+            _write_empty(staging_ds, pa.schema(
+                [("doc_id", pa.int64()), ("doc_len", pa.int64()), ("sha256", pa.string())]
+            ))
         cat.promote_dir(staging_tf, tf_dir)
-        cat.promote_dir(staging_sha, ds_sha_dir)
+        cat.promote_dir(staging_ds, ds_dir)
         cache = getattr(docs, "_pyfusedb_cache", None)
         if cache is not None:
             cache.unpersist()
-        _assemble_doc_stats(spark, ds_sha_dir, tf_dir, ds_dir)
         secs = time.perf_counter() - t0
+        total_len = sum(int(r["total_len"]) for r in scan_rows)
+        m_stats = {
+            "data_dir": ds_dir,
+            "n_docs": n_docs,
+            "avgdl": total_len / n_docs if n_docs else 0.0,
+            "total_len": total_len,
+            "sha256_lineage_sum": str(sum(int(r["lineage"]) for r in scan_rows)),
+        }
+        cat.commit("stage_stats", m_stats)
         m_tf = {
             "data_dir": tf_dir,
             "n_docs": n_docs,
@@ -610,37 +548,6 @@ def build_index(
     bucket_span = m_tf["bucket_span"]
     n_tparts = m_tf["n_tparts"]
     tpart_spread = m_tf.get("tpart_spread") or 1
-
-    # ---------------- stage stats ----------------
-    m_stats = cat.read_manifest("stage_stats") if resume else None
-    if m_stats is None:
-        # order-independent sha256 lineage fingerprint: sum of 60-bit hex
-        # prefixes (input_hint per-row invariant, recomputable). Local
-        # DuckDB read — no Spark job; Spark fallback below.
-        row = _local_agg(
-            f"SELECT count(*)::BIGINT AS n, avg(doc_len)::DOUBLE AS avgdl, "
-            f"coalesce(sum(doc_len), 0)::BIGINT AS total_len, "
-            # ::VARCHAR keeps the HUGEINT exact through pandas (a bare
-            # HUGEINT converts to float64 and silently rounds low digits)
-            f"coalesce(sum(('0x' || substring(sha256, 1, 15))::BIGINT), 0)::HUGEINT::VARCHAR AS lineage "
-            f"FROM '{ds_dir}/*.parquet'"
-        )
-        if row is None:
-            r = spark.read.parquet(ds_dir).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.avg("doc_len").alias("avgdl"),
-                F.sum("doc_len").alias("total_len"),
-                F.sum(F.conv(F.substring("sha256", 1, 15), 16, 10).cast("decimal(38,0)")).alias("lineage"),
-            ).collect()[0]
-            row = {"n": r["n"], "avgdl": r["avgdl"], "total_len": r["total_len"], "lineage": r["lineage"]}
-        m_stats = {
-            "data_dir": ds_dir,
-            "n_docs": int(row["n"]),
-            "avgdl": float(row["avgdl"] or 0.0),
-            "total_len": int(row["total_len"] or 0),
-            "sha256_lineage_sum": str(int(row["lineage"])),
-        }
-        cat.commit("stage_stats", m_stats)
     avgdl = m_stats["avgdl"]
 
     # ---------------- postings + lexicon ----------------
@@ -679,12 +586,7 @@ def build_index(
         )
 
     tok_secs = m_tf.get("seconds")
-    # resume of an index whose stage_stats manifest predates the
-    # total_len key: reconstruct from avgdl (mirrors streaming's
-    # _resolve_base_stats legacy handling)
-    total_len = m_stats.get("total_len")
-    if total_len is None:
-        total_len = int(round(avgdl * n_docs))
+    total_len = m_stats["total_len"]
     stats = {
         "format_version": 1,
         "config": asdict(config),

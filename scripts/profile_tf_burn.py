@@ -78,23 +78,26 @@ def _work_full(lo: int, hi: int, tmpdir: str) -> int:
     analyze = _get_analyzer(PRESET).analyze
     pid = os.getpid()
     writers = {}
-    sha_writer = None
+    ds_writer = None
     n = 0
     for b0 in range(lo, hi, BATCH):
         b1 = min(hi, b0 + BATCH)
         contents = _gen_rows(b0, b1)["content"].tolist()
         ids = np.arange(b0, b1, dtype=np.int64)
         shas = [hashlib.sha256((c or "").encode()).hexdigest() for c in contents]
-        sha_tbl = pa.table({"doc_id": pa.array(ids), "sha256": pa.array(shas)})
-        if sha_writer is None:
-            d = os.path.join(tmpdir, "sha")
+        counters = [Counter(analyze(c or "")) for c in contents]
+        lens = np.fromiter((sum(c.values()) for c in counters), np.int64, len(counters))
+        ds_tbl = pa.table({"doc_id": pa.array(ids), "doc_len": pa.array(lens),
+                           "sha256": pa.array(shas)})
+        if ds_writer is None:
+            d = os.path.join(tmpdir, "doc_stats")
             fsio.makedirs(d)
-            sha_writer = fsio.AtomicParquetWriter(
-                os.path.join(d, f"part-{pid}.parquet"), sha_tbl.schema,
+            ds_writer = fsio.AtomicParquetWriter(
+                os.path.join(d, f"part-{pid}.parquet"), ds_tbl.schema,
                 compression="snappy",
             )
-        sha_writer.write_table(sha_tbl)
-        rb = pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
+        ds_writer.write_table(ds_tbl)
+        rb = pack_batch(ids, counters, lens)
         if rb is None:
             continue
         tps = np.asarray(rb.column("tpart").to_numpy(zero_copy_only=False))
@@ -115,8 +118,8 @@ def _work_full(lo: int, hi: int, tmpdir: str) -> int:
         n += len(ids)
     for w in writers.values():
         w.close()
-    if sha_writer is not None:
-        sha_writer.close()
+    if ds_writer is not None:
+        ds_writer.close()
     return n
 
 

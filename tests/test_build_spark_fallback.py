@@ -1,12 +1,12 @@
-"""Force the Spark (real-cluster) branches of build_index.
+"""Build and search with DuckDB blocked.
 
-The build uses driver-local DuckDB aggregations for manifest stats at
-toy scale, with Spark fallbacks for real clusters / non-local
-filesystems. Round-1 review: "the DuckDB branch is what actually ran in
-all evidence" — so this test blocks duckdb (sys.modules poisoning makes
-`import duckdb` raise) and proves the file-shuffle build's Spark paths
-(doc_stats assembly, stage stats, exact vocabulary over bucket-salted
-lexicon slices) produce an identically-searchable index."""
+The engine has no DuckDB code path: stage stats are summed from the
+scan tasks' rows and the exact vocabulary is a pyarrow distinct over the
+lexicon's term column. This test blocks duckdb (sys.modules poisoning
+makes `import duckdb` raise) and proves that a file-shuffle build,
+including the distinct vocabulary over bucket-salted lexicon slices,
+and its BM25/TF-IDF search need no DuckDB at all (DuckDB stays a test
+oracle only)."""
 
 import sys
 

@@ -4,7 +4,8 @@
   counts;
 - a killed build (simulated by deleting a committed tpart unit, or only
   a stage manifest) resumes by rebuilding ONLY the missing unit, and the
-  resumed index is identical to a fresh build;
+  resumed index is identical to a fresh build; a stage tf without its
+  stage stats re-runs the scan;
 - a root whose tf stage has no tpart layout is refused, not resumed.
 """
 
@@ -140,6 +141,35 @@ def test_resume_rederives_missing_stage_lexicon(spark, tmp_path):
     assert _search_all(FuseIndex(spark, out)) == before
 
 
+def test_resume_without_stage_stats_reruns_tf(spark, tmp_path):
+    """stage_stats is committed from the scan's task rows just before
+    stage_tf; a stage_tf without it re-runs the scan (no read-back of
+    tf/ or doc_stats/) and the resumed index is identical."""
+    corpus = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
+    )
+    out = str(tmp_path / "resume_stats")
+    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4)
+    first = build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
+    before = _search_all(FuseIndex(spark, out))
+    tf_mtimes = {
+        p: os.path.getmtime(p)
+        for p in glob.glob(os.path.join(out, "tf", "**", "*.parquet"), recursive=True)
+    }
+    assert tf_mtimes, "expected tf files"
+
+    os.remove(os.path.join(out, "_manifests", "stage_stats.json"))
+    again = build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg, resume=True)
+
+    assert not any(
+        os.path.exists(p) and os.path.getmtime(p) == m for p, m in tf_mtimes.items()
+    ), "stage tf was not re-run"
+    keys = ("n_docs", "avgdl", "total_len", "sha256_lineage_sum", "vocabulary", "n_postings")
+    assert {k: again[k] for k in keys} == {k: first[k] for k in keys}
+    assert os.path.exists(os.path.join(out, "_manifests", "stage_stats.json"))
+    assert _search_all(FuseIndex(spark, out)) == before
+
+
 def test_resume_refuses_pre_tpart_stage_tf(spark, tmp_path):
     """A stage_tf manifest without n_tparts is the layout the retired
     live-exchange posting modes wrote: build_index refuses it, resumed
@@ -205,6 +235,24 @@ def test_sha256_lineage_invariant(spark, tmp_path):
     assert sa["sha256_lineage_sum"] == sb["sha256_lineage_sum"]
     assert sa["n_docs"] == sb["n_docs"] == 200
     assert sa["n_postings"] == sb["n_postings"]
+
+
+def test_sha256_lineage_equals_hashlib_sum(spark, tmp_path):
+    """The lineage is the exact (unbounded) Σ of 60-bit sha256 prefixes:
+    200 docs overflow int64, which build-vs-build equality would miss."""
+    import hashlib
+
+    corpus = synthetic_code_corpus(spark, 200, n_partitions=3)
+    stats = build_index(spark, corpus, str(tmp_path / "lin"),
+                        sort_cols=["repo", "path", "commit"],
+                        config=IndexConfig(preset="code", n_buckets=2, compute_norms=False,
+                                           shuffle_partitions=4))
+    expect = sum(
+        int(hashlib.sha256((r["content"] or "").encode("utf-8")).hexdigest()[:15], 16)
+        for r in corpus.select("content").collect()
+    )
+    assert expect >= 2**63
+    assert stats["sha256_lineage_sum"] == str(expect)
 
 
 def test_orphan_staging_dirs_are_cleaned(tmp_path):

@@ -235,3 +235,38 @@ def test_sqlfront_limit_zero_and_negative(spark, pangram_index):
     assert sess.sql("SELECT content FROM t LIMIT 0").count() == 0
     neg = sess.sql("SELECT content FROM t LIKE quick LIMIT -5", top_k=3)
     assert neg.count() == 3  # clause ignored, top_k governs
+
+
+def test_duplicate_doc_ids_stats_match_oracle(spark, tmp_path):
+    """Each corpus row counts once with its own token count, even when
+    rows share a doc_id: N, total_len and avgdl equal the oracle's
+    (doc_len comes from the scan row, not max(dl) per id)."""
+    rows = [(0, "cat cat"), (0, "cat"), (1, "cat dog")]
+    docs = spark.createDataFrame(rows, "doc_id long, content string")
+    stats = build_index(spark, docs, str(tmp_path / "dup"), doc_id_col="doc_id",
+                        config=IndexConfig(preset="simple", n_buckets=2))
+    oracle = OracleIndex(Analyzer("simple")).build(rows)
+    assert stats["n_docs"] == oracle.n_docs == 3
+    assert stats["total_len"] == round(oracle.avgdl * oracle.n_docs) == 5
+    assert stats["avgdl"] == pytest.approx(oracle.avgdl, abs=1e-12)
+
+
+@pytest.mark.parametrize("norms", [True, False], ids=["norms", "no-norms"])
+def test_empty_corpus_builds_and_searches(spark, tmp_path, norms):
+    """Zero rows build an empty, searchable index: zero stats, an empty
+    doc_stats parquet with the full schema, and empty search results."""
+    import pyarrow.dataset as pads
+
+    docs = spark.createDataFrame([], "doc_id long, content string")
+    out = str(tmp_path / "empty")
+    stats = build_index(spark, docs, out, doc_id_col="doc_id",
+                        config=IndexConfig(compute_norms=norms))
+    assert (stats["n_docs"], stats["avgdl"], stats["vocabulary"], stats["n_postings"]) == (
+        0, 0.0, 0, 0)
+    ds = pads.dataset(f"{out}/doc_stats", format="parquet").to_table()
+    assert ds.num_rows == 0
+    assert ds.schema.names == ["doc_id", "doc_len", "sha256"]
+    idx = FuseIndex(spark, out)
+    assert idx.search("quick fox", 10) == []
+    if norms:
+        assert idx.search("quick fox", 10, mode="tfidf") == []
