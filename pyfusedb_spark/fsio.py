@@ -42,6 +42,20 @@ def get_fs(path: str):
     return pafs.FileSystem.from_uri(path)
 
 
+def dataset(source: str | list[str], **kwargs):
+    """pyarrow parquet dataset over a path, a URI or a list of files on one
+    filesystem (pyarrow resolves one URI string itself, not a URI list)."""
+    import pyarrow.dataset as pads
+
+    first = source if isinstance(source, str) else (source or [""])[0]
+    if is_uri(first):
+        fs, p = get_fs(first)
+        cut = len(_uri_prefix(first, p))
+        source = source[cut:] if isinstance(source, str) else [s[cut:] for s in source]
+        kwargs["filesystem"] = fs
+    return pads.dataset(source, format="parquet", **kwargs)
+
+
 def _is_local_fs(fs) -> bool:
     import pyarrow.fs as pafs
 

@@ -35,6 +35,8 @@ double count.
 
 from __future__ import annotations
 
+from pyfusedb_spark import fsio
+
 STREAM_GEN_BUCKET_BASE = 500_000
 STREAM_BATCH_BUCKET_BASE = 1 << 30  # int32-safe; ~10^9 micro-batches
 # Max LSM levels (fold factor K per level => level L covers K^(L+1)
@@ -87,3 +89,19 @@ def visible_bucket_components(stats: dict) -> tuple[list[int], int | None] | Non
             "folded_batches); rebuild it with the current writer"
         )
     return None
+
+
+def lexicon_files(lex_dir: str) -> list[str]:
+    """Every parquet file of a lexicon dir, sorted: root files plus one
+    level of ``k=v`` subdirs (a base build's ``tpart=P`` slices and the
+    streaming LSM ``seg=B`` deltas), staging ``.tmp-`` dirs skipped. Mixed
+    depths break Spark's and pyarrow's partition discovery, so readers of
+    a segmented lexicon take this list; they sum df/total_tf per term."""
+    out = []
+    for n in fsio.listdir(lex_dir):
+        if n.endswith(".parquet"):
+            out.append(fsio.join(lex_dir, n))
+        elif "=" in n and ".tmp-" not in n:
+            sub = fsio.join(lex_dir, n)
+            out.extend(fsio.join(sub, m) for m in fsio.listdir(sub) if m.endswith(".parquet"))
+    return sorted(out)

@@ -12,13 +12,16 @@ with:
   arrays — exhaustive, or the vectorized **block-max** scorer ("bmx",
   R4 + C4 in SURVEY.md §2) — the reference has no early termination at
   all (full sort, ``app/InvertedIndex.py:384``);
-- a *distributed path* for hot terms / huge df: decode chunks in
-  executors via ``mapInPandas``, explode score contributions, one
-  ``groupBy(doc_id)`` shuffle, ``orderBy().limit(k)`` (Spark plans
-  TakeOrderedAndProject — no global sort).
+- a *distributed path*: one Spark task per visible doc-range bucket
+  reads that bucket's chunks through the same pyarrow read, decodes
+  them into the same :class:`TermPostings` and runs the same
+  :func:`exhaustive_topk` kernel; ``orderBy().limit(k)`` merges the
+  per-bucket top-k rows (TakeOrderedAndProject, no Exchange — a doc's
+  score never depends on another bucket).
 
 Both paths are rank-identical to ``pyfusedb_spark.oracle`` with total tie
-order (-score, doc_id) (SURVEY.md §7.5).
+order (-score, doc_id) (SURVEY.md §7.5). Both read the index only through
+pyarrow (``fsio.dataset``), so an unreadable index raises.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ from __future__ import annotations
 import json
 import math
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,6 +42,7 @@ from pyfusedb_spark.functions import codec
 from pyfusedb_spark.layout import (
     STREAM_BATCH_BUCKET_BASE,
     STREAM_GEN_BUCKET_BASE,
+    lexicon_files,
     visible_bucket_components,
 )
 from pyfusedb_spark.oracle import bm25_idf, tfidf_weight
@@ -125,6 +128,126 @@ _NO_POSTINGS = TermPostings(  # a term whose chunks are all invisible
     _EMPTY, _EMPTY, _EMPTY.astype(np.float64), 0.0,
 )
 
+_CHUNK_COLS = (
+    "term", "bucket", "df_chunk", "payload",
+    "block_first", "block_last", "block_max_partial", "max_partial",
+)
+
+
+def read_chunk_rows(ds, terms: list[str], tparts: list[int] | None,
+                    where=None) -> pd.DataFrame:
+    """Chunk rows of ``terms`` from a pyarrow dataset over ``index`` or one
+    ``index/bucket=K`` dir, sorted by term (then bucket, if a column):
+    ``term IN`` prunes term-sorted row groups, ``tparts`` (None = no tpart
+    layout) the ``tpart=P`` dirs; ``where`` is an extra filter."""
+    import pyarrow.compute as pc
+
+    flt = pc.field("term").isin(terms)
+    if tparts is not None and "tpart" in ds.schema.names:
+        flt = pc.field("tpart").isin(tparts) & flt
+    if where is not None:
+        flt = flt & where
+    cols = [c for c in _CHUNK_COLS if c in ds.schema.names]
+    pdf = ds.to_table(filter=flt, columns=cols).to_pandas()
+    keys = [c for c in ("term", "bucket") if c in cols]
+    return pdf.sort_values(keys, kind="mergesort").reset_index(drop=True)
+
+
+def read_norm_rows(ds, ids: np.ndarray) -> pd.DataFrame:
+    """(doc_id, norm) rows of exactly ``ids`` from a pyarrow dataset over
+    ``doc_stats_full`` (row-group stats prune on doc_id, written in runs)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return ds.to_table(
+        filter=pc.field("doc_id").isin(pa.array(ids, type=pa.int64())),
+        columns=["doc_id", "norm"],
+    ).to_pandas()
+
+
+def align_norms(ids: np.ndarray, rows: pd.DataFrame) -> np.ndarray:
+    """Norms aligned to sorted, unique, non-empty ``ids`` from (doc_id,
+    norm) rows; a missing, zero or NaN norm is 1.0 (a streamed doc has
+    no stored norm)."""
+    got_ids = rows["doc_id"].to_numpy(dtype=np.int64)
+    got = rows["norm"].to_numpy(dtype=np.float64)
+    vals = np.ones(ids.size, dtype=np.float64)
+    pos = np.minimum(np.searchsorted(ids, got_ids), ids.size - 1)
+    hit = ids[pos] == got_ids
+    vals[pos[hit]] = got[hit]
+    vals[(vals == 0) | np.isnan(vals)] = 1.0
+    return vals
+
+
+def _top_k(ids: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
+    """The k best (doc_id, score) in (-score, doc_id) order, exact on ties."""
+    kk = min(k, ids.size)
+    if kk <= 0:
+        return []
+    part = np.argpartition(-scores, kk - 1)[:kk]
+    tie = np.flatnonzero(scores >= scores[part].min())
+    order = tie[np.lexsort((ids[tie], -scores[tie]))][:k]
+    return [(int(ids[i]), float(scores[i])) for i in order]
+
+
+def exhaustive_topk(postings: dict[str, TermPostings], q_tfs: dict[str, int],
+                    dfs: dict[str, int], n_docs: int, mode: str, conjunctive: bool,
+                    top_k: int, norms=None) -> list[tuple[int, float]]:
+    """Exact top-k over every posting of ``postings`` (one entry per query
+    term with a df): BM25, or TF-IDF cosine with doc norms ``norms(ids)``
+    when ``mode == "tfidf"``; ``conjunctive`` keeps docs holding every term.
+
+    Terms are summed in sorted order, so a doc's score is bit-identical
+    whether ``postings`` covers every visible bucket (driver) or one
+    (a ``search_distributed`` task). The accumulator is sized from the
+    ids it gets, so ids far from 0 (a streamed bucket) need no bound."""
+    terms = sorted(postings)
+    ids_all, contrib_all = [], []
+    q_sq = 0.0
+    for term in terms:
+        p = postings[term]
+        if mode == "tfidf":
+            w_tq = tfidf_weight(q_tfs[term], dfs[term], n_docs)
+            q_sq += w_tq * w_tq
+        if not p.docs.size:
+            continue
+        if mode == "tfidf":
+            idf10 = math.log10(n_docs / dfs[term])
+            contrib = (1.0 + np.log10(p.tfs.astype(np.float64))) * idf10 * w_tq
+        else:
+            contrib = float(q_tfs[term]) * bm25_idf(dfs[term], n_docs) * p.partials
+        ids_all.append(p.docs)
+        contrib_all.append(contrib)
+    if not ids_all:
+        return []
+    ids = np.concatenate(ids_all)
+    contribs = np.concatenate(contrib_all)
+    hi = int(ids.max())
+    lo = 0 if hi < (1 << 26) else int(ids.min())  # shift only ids far from 0
+    if hi - lo < (1 << 26):
+        # dense accumulation: bincount replaces a sort-based unique —
+        # the sort dominated hot multi-term queries (~1s for 7.6M
+        # contributions at 1M docs)
+        rel = ids - lo if lo else ids
+        sums = np.bincount(rel, weights=contribs)
+        hits = np.bincount(rel)
+        cand = np.flatnonzero(hits == len(terms)) if conjunctive else np.flatnonzero(hits)
+        svals = sums[cand]
+        cand += lo
+    else:
+        cand, inv = np.unique(ids, return_inverse=True)
+        svals = np.zeros(cand.size, dtype=np.float64)
+        np.add.at(svals, inv, contribs)
+        if conjunctive:
+            keep = np.bincount(inv, minlength=cand.size) == len(terms)
+            cand, svals = cand[keep], svals[keep]
+    if cand.size == 0:
+        return []
+    if mode == "tfidf":
+        q_norm = math.sqrt(q_sq)
+        svals = svals / (norms(cand) * q_norm) if q_norm > 0 else svals * 0.0
+    return _top_k(cand, svals, top_k)
+
 
 class _NormsCache:
     """doc_id -> TF-IDF L2 norm, FIFO-evicted to a byte budget.
@@ -203,7 +326,9 @@ class FuseIndex:
         self.avgdl = self.stats["avgdl"]
         self._lexicon_pd: dict[str, int] | None = None
         self._pa_index = None  # lazy pyarrow dataset over the index dir
-        self._pa_doc_stats = None  # lazy pyarrow dataset over doc_stats
+        self._pa_doc_stats = None  # lazy pyarrow dataset over doc_stats_full
+        norms_dir = fsio.join(self.out_dir, "doc_stats_full")
+        self._norms_dir = norms_dir if fsio.isdir(norms_dir) else None
         # keep the term dictionary hot on the driver when it's small
         # (the reference's v1 in-memory main_dictionary analog,
         # app/InvertedIndex.py:338-340); huge-vocab indexes fall back to
@@ -252,35 +377,14 @@ class FuseIndex:
                 pass
 
     # -- lazy DataFrames ----------------------------------------------------
-    @property
-    def index_df(self) -> DataFrame:
-        return self.spark.read.parquet(fsio.join(self.out_dir, "index"))
-
     def _lexicon_seg_files(self) -> list[str] | None:
-        """Parquet file list for an LSM-layout lexicon (delta `seg=B`
-        dirs appended by streaming beside a compacted/base root — see
-        streaming/incremental.py). Mixed depths break both Spark's and
-        pyarrow's partition discovery, so those readers get an explicit
-        file list instead. None = uniform layout, use plain dir reads.
-        A term may then appear once per segment; every consumer SUMS
-        df/total_tf across its rows."""
+        """``layout.lexicon_files`` of an LSM-layout lexicon (streamed
+        ``seg=B`` deltas beside the base, streaming/incremental.py), or
+        None for a uniform layout that plain dir reads handle."""
         lex = fsio.join(self.out_dir, "lexicon")
-        names = fsio.listdir(lex)
-        if not any(n.startswith("seg=") for n in names):
+        if not any(n.startswith("seg=") for n in fsio.listdir(lex)):
             return None
-        # any one-level subdir: seg=B deltas AND a base build's tpart=P
-        # slices (both can coexist until the first compaction)
-        out = []
-        for n in names:
-            if n.endswith(".parquet"):
-                out.append(fsio.join(lex, n))
-            elif "=" in n and ".tmp-" not in n:
-                sub = fsio.join(lex, n)
-                out.extend(
-                    fsio.join(sub, m) for m in fsio.listdir(sub)
-                    if m.endswith(".parquet")
-                )
-        return sorted(out)
+        return lexicon_files(lex)
 
     @property
     def lexicon_df(self) -> DataFrame:
@@ -288,12 +392,8 @@ class FuseIndex:
         several slices (bucket-salted tpart routing) and/or LSM delta
         segments — this view merges them (sum df/total_tf/n_chunks,
         max max_partial)."""
-        files = self._lexicon_seg_files()
-        if files is not None:
-            raw = self.spark.read.parquet(*files)
-        else:
-            raw = self.spark.read.parquet(fsio.join(self.out_dir, "lexicon"))
-        return raw.groupBy("term").agg(
+        files = self._lexicon_seg_files() or [fsio.join(self.out_dir, "lexicon")]
+        return self.spark.read.parquet(*files).groupBy("term").agg(
             F.sum("df").alias("df"),
             F.sum("total_tf").alias("total_tf"),
             F.max("max_partial").alias("max_partial"),
@@ -302,80 +402,41 @@ class FuseIndex:
 
     @property
     def doc_stats_df(self) -> DataFrame:
-        full = fsio.join(self.out_dir, "doc_stats_full")
-        if fsio.exists(full):
-            return self.spark.read.parquet(full)
-        return self.spark.read.parquet(fsio.join(self.out_dir, "doc_stats"))
+        return self.spark.read.parquet(self._norms_dir or fsio.join(self.out_dir, "doc_stats"))
 
     # -- fetch --------------------------------------------------------------
     def _query_terms(self, query: str) -> dict[str, int]:
         return self.analyzer.preprocess_query(query)
 
-    @staticmethod
-    def _sum_df(terms_col, df_col) -> dict[str, int]:
-        """(term, df) rows -> {term: Σdf}. An LSM lexicon stores one row
-        per term PER SEGMENT, so summation is the read-side merge."""
-        out: dict[str, int] = {}
-        for t, d in zip(terms_col, df_col):
-            out[t] = out.get(t, 0) + int(d)
-        return out
-
     def _fetch_dfs(self, terms: list[str]) -> dict[str, int]:
-        seg_files = self._lexicon_seg_files()
         if self.stats.get("vocabulary", 0) <= self._lexicon_cache_max:
             if self._lexicon_pd is None:
-                try:
-                    import pyarrow.dataset as pads
-
-                    src = seg_files if seg_files is not None else fsio.join(
-                        self.out_dir, "lexicon"
-                    )
-                    tbl = pads.dataset(src, format="parquet").to_table(
-                        columns=["term", "df"]
-                    )
-                    self._lexicon_pd = self._sum_df(
-                        tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
-                    )
-                except Exception:
-                    # same degradation path as the huge-vocab branch:
-                    # filesystems pyarrow can't reach fall back to Spark
-                    rows = self.lexicon_df.select("term", "df").collect()
-                    self._lexicon_pd = self._sum_df(
-                        [r["term"] for r in rows], [r["df"] for r in rows]
-                    )
+                self._lexicon_pd = self._read_dfs(None)
             return {t: self._lexicon_pd[t] for t in terms if t in self._lexicon_pd}
         # huge-vocab path: per-query pruned lookup (lexicon is written
-        # term-sorted with small row groups -> stats pruning), pyarrow
-        # first (no Spark job scheduling), Spark scan as last resort
-        try:
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pads
+        # term-sorted with small row groups -> stats pruning)
+        return self._read_dfs(terms)
 
-            if seg_files is not None:
-                ds = pads.dataset(seg_files, format="parquet")
-            else:
-                ds = pads.dataset(
-                    fsio.join(self.out_dir, "lexicon"), format="parquet",
-                    partitioning="hive",
-                )
+    def _read_dfs(self, terms: list[str] | None) -> dict[str, int]:
+        """{term: Σdf} over the lexicon rows of ``terms`` (None = every
+        term). An LSM lexicon stores one row per term PER SEGMENT, so
+        summation is the read-side merge."""
+        import pyarrow.compute as pc
+
+        files = self._lexicon_seg_files()
+        ds = fsio.dataset(files) if files is not None else fsio.dataset(
+            fsio.join(self.out_dir, "lexicon"), partitioning="hive")
+        flt = None
+        if terms is not None:
             flt = pc.field("term").isin(terms)
             tparts = self._tpart_filter_vals(terms)
             if tparts is not None and "tpart" in ds.schema.names:
                 flt = pc.field("tpart").isin(tparts) & flt
-            tbl = ds.to_table(filter=flt, columns=["term", "df"])
-            return self._sum_df(
-                tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
-            )
-        except Exception:
-            rows = (
-                self.lexicon_df.where(F.col("term").isin(terms)).select("term", "df").collect()
-            )
-            return self._sum_df([r["term"] for r in rows], [r["df"] for r in rows])
-
-    _CHUNK_COLS = (
-        "term", "bucket", "df_chunk", "payload",
-        "block_first", "block_last", "block_max_partial", "max_partial",
-    )
+        tbl = ds.to_table(filter=flt, columns=["term", "df"])
+        out: dict[str, int] = {}
+        for t, d in zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()):
+            out[t] = out.get(t, 0) + int(d)
+        return out
 
     def _fetch_chunks(self, terms: list[str]) -> dict[str, TermPostings]:
         """Decoded postings of ``terms`` for the driver scorers.
@@ -439,28 +500,6 @@ class FuseIndex:
             out.update(term_tpart_probe(t, int(n), spread))
         return sorted(out)
 
-    def _apply_bucket_visibility(self, df: DataFrame) -> DataFrame:
-        """Spark-side mirror of the pyarrow visibility filter: only the
-        base buckets, the flipped compacted stream segments, and batch
-        buckets newer than folded_upto are scored (streaming/
-        incremental.py tiered compaction — an unflipped fresh segment
-        or a not-yet-GC'd folded dir must never be scored). Both the
-        live-batch side and the folded side are RANGE predicates; only
-        the visible segment list (≤ K per level) is an isin."""
-        vis = visible_bucket_components(self.stats)
-        if vis is None:
-            return df
-        segs, folded_upto = vis
-        live_from = STREAM_BATCH_BUCKET_BASE + (
-            folded_upto + 1 if folded_upto is not None else 0
-        )
-        cond = (F.col("bucket") < STREAM_GEN_BUCKET_BASE) | (
-            F.col("bucket") >= live_from
-        )
-        if segs:
-            cond = cond | F.col("bucket").isin(segs)
-        return df.where(cond)
-
     def _pa_visibility_filter(self, pc):
         """pyarrow.compute expression for the same visibility rule, or
         None when no streaming-compaction state exists."""
@@ -478,77 +517,48 @@ class FuseIndex:
             flt = flt | pc.field("bucket").isin(segs)
         return flt
 
+    def _visible_buckets(self) -> list[int]:
+        """Ids of the ``index/bucket=K`` dirs a search reads, ascending:
+        the listed dirs kept by the same visibility expression the
+        driver's fetch pushes down."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        names = fsio.listdir(fsio.join(self.out_dir, "index"))
+        ids = [int(n.split("=", 1)[1]) for n in names
+               if n.startswith("bucket=") and ".tmp-" not in n]
+        vflt = self._pa_visibility_filter(pc)
+        if vflt is not None:
+            tbl = pa.table({"bucket": pa.array(ids, pa.int64())}).filter(vflt)
+            ids = tbl.column("bucket").to_pylist()
+        return sorted(ids)
+
     def _fetch_chunks_uncached(self, terms: list[str]) -> pd.DataFrame:
-        """Chunk rows of ``terms``, sorted by (term, bucket).
+        """Chunk rows of ``terms`` over every visible bucket, sorted by
+        (term, bucket): :func:`read_chunk_rows` over the whole index dir
+        through pyarrow — no per-query Spark job (this path IS the
+        driver; the executor path is ``search_distributed``)."""
+        import pyarrow.compute as pc
 
-        Reads the term-RANGE-partitioned index parquet directly through
-        pyarrow.dataset — no per-query Spark job scheduling (this path
-        IS the driver; the executor path is ``search_distributed``).
-        Files cover disjoint term ranges (build uses repartitionByRange)
-        so file-level min/max stats prune to ~1-2 files and row-group
-        stats prune within them. Spark-scan fallback for filesystems
-        pyarrow cannot reach."""
-        tparts = self._tpart_filter_vals(terms)
-        try:
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pads
+        if self._pa_index is None:
+            self._pa_index = fsio.dataset(fsio.join(self.out_dir, "index"), partitioning="hive")
+        return read_chunk_rows(self._pa_index, terms, self._tpart_filter_vals(terms),
+                               self._pa_visibility_filter(pc))
 
-            if self._pa_index is None:
-                self._pa_index = pads.dataset(
-                    fsio.join(self.out_dir, "index"),
-                    format="parquet",
-                    partitioning="hive",
-                )
-            flt = pc.field("term").isin(terms)
-            if tparts is not None and "tpart" in self._pa_index.schema.names:
-                flt = pc.field("tpart").isin(tparts) & flt
-            vflt = self._pa_visibility_filter(pc)
-            if vflt is not None:
-                flt = flt & vflt
-            pdf = self._pa_index.to_table(
-                filter=flt, columns=list(self._CHUNK_COLS)
-            ).to_pandas()
-        except Exception:
-            df = self._apply_bucket_visibility(self.index_df)
-            if tparts is not None:
-                df = df.where(F.col("tpart").isin(tparts))
-            pdf = (
-                df.where(F.col("term").isin(terms))
-                .select(*self._CHUNK_COLS)
-                .toPandas()
+    def _require_norms(self) -> str:
+        """The ``doc_stats_full`` dir TF-IDF reads its norms from."""
+        if self._norms_dir is None:
+            raise ValueError(
+                f"TF-IDF needs document norms, but {self.out_dir} has no "
+                "doc_stats_full: build it with IndexConfig(compute_norms=True)"
             )
-        return pdf.sort_values(["term", "bucket"], kind="mergesort").reset_index(drop=True)
+        return self._norms_dir
 
     def _fetch_norm_rows(self, ids: "np.ndarray") -> pd.DataFrame:
-        """(doc_id, norm) rows for exactly these ids — pyarrow dataset
-        pushdown against the doc_stats parquet (row-group stats prune on
-        doc_id; doc_stats is written in doc_id runs per scan task), with
-        a Spark-scan fallback for filesystems pyarrow cannot reach."""
-        try:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pads
-
-            if self._pa_doc_stats is None:
-                path = fsio.join(self.out_dir, "doc_stats_full")
-                if not fsio.isdir(path):
-                    path = fsio.join(self.out_dir, "doc_stats")
-                self._pa_doc_stats = pads.dataset(
-                    path, format="parquet", partitioning="hive"
-                )
-            tbl = self._pa_doc_stats.to_table(
-                filter=pc.field("doc_id").isin(pa.array(ids, type=pa.int64())),
-                columns=["doc_id", "norm"],
-            )
-            return tbl.to_pandas()
-        except Exception:
-            return (
-                self.doc_stats_df.where(
-                    F.col("doc_id").isin([int(x) for x in ids])
-                )
-                .select("doc_id", "norm")
-                .toPandas()
-            )
+        """(doc_id, norm) rows for exactly these ids (:func:`read_norm_rows`)."""
+        if self._pa_doc_stats is None:
+            self._pa_doc_stats = fsio.dataset(self._require_norms(), partitioning="hive")
+        return read_norm_rows(self._pa_doc_stats, ids)
 
     def _norms_for(self, ids: "np.ndarray") -> np.ndarray:
         """L2 norms aligned to ``ids`` (missing/zero/NaN -> 1.0).
@@ -562,14 +572,7 @@ class FuseIndex:
         out, found = cache.lookup(ids64)
         if not found.all():
             miss = np.unique(ids64[~found])
-            pdf = self._fetch_norm_rows(miss)
-            got_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            got = pdf["norm"].to_numpy(dtype=np.float64)
-            vals = np.ones(miss.size, dtype=np.float64)  # absent ids cache as 1.0
-            pos = np.minimum(np.searchsorted(miss, got_ids), miss.size - 1)
-            hit = miss[pos] == got_ids
-            vals[pos[hit]] = got[hit]
-            vals[(vals == 0) | np.isnan(vals)] = 1.0
+            vals = align_norms(miss, self._fetch_norm_rows(miss))  # absent ids cache as 1.0
             out[~found] = vals[np.searchsorted(miss, ids64[~found])]
             cache.insert(miss, vals)
         # evict AFTER gathering: a query whose candidate set mixes old
@@ -580,6 +583,16 @@ class FuseIndex:
         return out
 
     # -- public search API ----------------------------------------------------
+    def _resolve_terms(self, query: str, conjunctive: bool):
+        """(q_tfs, dfs, terms): analyzed query tfs, lexicon dfs and the
+        sorted terms to score — empty when the query can match nothing."""
+        q_tfs = self._query_terms(query)
+        dfs = self._fetch_dfs(sorted(q_tfs)) if q_tfs else {}
+        terms = [t for t in sorted(q_tfs) if t in dfs]
+        if conjunctive and len(terms) < len(q_tfs):
+            terms = []  # some query term matches nothing
+        return q_tfs, dfs, terms
+
     def search(
         self,
         query: str,
@@ -602,21 +615,18 @@ class FuseIndex:
         paths are rank-identical (tests force each).
         ``last_search_stats`` records the path, its pruning counts and
         the fetch's ``chunk_cache_hits``, ``chunk_cache_misses`` and
-        ``decoded_postings``."""
+        ``decoded_postings``. ``mode="tfidf"`` raises ``ValueError`` on
+        an index built without ``compute_norms``."""
         if use_wand not in ("auto", "bmx", False):
             raise ValueError(
                 f"use_wand must be 'auto', 'bmx' or False, not {use_wand!r}"
             )
         self._refresh_if_stale()
-        q_tfs = self._query_terms(query)
-        if not q_tfs:
-            return []
-        dfs = self._fetch_dfs(sorted(q_tfs))
-        terms = [t for t in sorted(q_tfs) if t in dfs]
+        if mode == "tfidf":
+            self._require_norms()
+        q_tfs, dfs, terms = self._resolve_terms(query, conjunctive)
         if not terms:
             return []
-        if conjunctive and len(terms) < len(q_tfs):
-            return []  # some query term matches nothing
         chunks = self._fetch_chunks(terms)
         out = self._score(chunks, terms, q_tfs, dfs, top_k, mode, conjunctive, use_wand)
         self.last_search_stats.update(self._fetch_counts)
@@ -661,7 +671,8 @@ class FuseIndex:
             if out is not None:
                 return out
             # bmx declined this shape: fall through to exhaustive
-        out = self._exhaustive(chunks, terms, q_tfs, dfs, top_k, mode, conjunctive)
+        out = exhaustive_topk(chunks, q_tfs, dfs, self.n_docs, mode, conjunctive, top_k,
+                              self._norms_for if mode == "tfidf" else None)
         self.last_search_stats = {
             "path": "exhaustive",
             "postings_total": int(sum(dfs[t] for t in terms)),
@@ -781,91 +792,12 @@ class FuseIndex:
             "hot_blocks_scored": int(blocks_scored),
             "hot_blocks_skipped": int(blocks_total - blocks_scored),
         }
-        if cand.size == 0:
-            return []
-        svals = sums[cand]
-        kk = min(top_k, cand.size)
-        part = np.argpartition(-svals, kk - 1)[:kk]
-        thresh = svals[part].min()
-        tie = np.flatnonzero(svals >= thresh)
-        order = tie[np.lexsort((cand[tie], -svals[tie]))][:top_k]
-        return [(int(cand[i]), float(svals[i])) for i in order]
-
-    def _exhaustive(
-        self,
-        chunks: dict[str, TermPostings],
-        terms: list[str],
-        q_tfs: dict[str, int],
-        dfs: dict[str, int],
-        top_k: int,
-        mode: str,
-        conjunctive: bool,
-    ) -> list[tuple[int, float]]:
-        ids_all, contrib_all = [], []
-        q_sq = 0.0
-        for term in terms:
-            p = chunks[term]
-            if not p.docs.size:
-                continue
-            if mode == "bm25":
-                qw = float(q_tfs[term]) * bm25_idf(dfs[term], self.n_docs)
-                contrib = qw * p.partials
-            else:
-                w_tq = tfidf_weight(q_tfs[term], dfs[term], self.n_docs)
-                q_sq += w_tq * w_tq
-                idf10 = math.log10(self.n_docs / dfs[term])
-                w_td = (1.0 + np.log10(p.tfs.astype(np.float64))) * idf10
-                contrib = w_td * w_tq
-            ids_all.append(p.docs)
-            contrib_all.append(contrib)
-        if not ids_all:
-            return []
-        ids = np.concatenate(ids_all)
-        contribs = np.concatenate(contrib_all)
-        dense_n = self._dense_id_bound()
-        if ids.size:
-            # stats can under-report after incremental appends; the
-            # fetched postings are the ground truth for sizing
-            dense_n = max(dense_n, int(ids.max()) + 1)
-        if dense_n <= (1 << 26):
-            # dense accumulation: doc ids are (near-)dense, so bincount
-            # replaces a sort-based unique — the sort dominated hot
-            # multi-term queries (~1s for 7.6M contributions at 1M docs)
-            sums = np.bincount(ids, weights=contribs, minlength=dense_n)
-            hits = np.bincount(ids, minlength=dense_n)
-            cand = np.flatnonzero(hits == len(terms)) if conjunctive else np.flatnonzero(hits)
-            if cand.size == 0:
-                return []
-            svals = sums[cand]
-            if mode == "tfidf":
-                q_norm = math.sqrt(q_sq)
-                svals = svals / (self._norms_for(cand) * q_norm) if q_norm > 0 else svals * 0.0
-            kk = min(top_k, cand.size)
-            part = np.argpartition(-svals, kk - 1)[:kk]
-            thresh = svals[part].min()
-            tie = np.flatnonzero(svals >= thresh)  # exact (-score, doc_id) ties
-            order = tie[np.lexsort((cand[tie], -svals[tie]))][:top_k]
-            return [(int(cand[i]), float(svals[i])) for i in order]
-        uniq, inv = np.unique(ids, return_inverse=True)
-        sums = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(sums, inv, contribs)
-        if conjunctive:
-            hits = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(hits, inv, 1)
-            keep = hits == len(terms)
-            uniq, sums = uniq[keep], sums[keep]
-            if uniq.size == 0:
-                return []
-        if mode == "tfidf":
-            q_norm = math.sqrt(q_sq)
-            sums = sums / (self._norms_for(uniq) * q_norm) if q_norm > 0 else sums * 0.0
-        order = np.lexsort((uniq, -sums))[:top_k]
-        return [(int(uniq[i]), float(sums[i])) for i in order]
+        return _top_k(cand, sums[cand], top_k)
 
     def _dense_id_bound(self) -> int:
-        """Exclusive upper bound on doc ids (for dense accumulators);
-        a huge sentinel routes unknown-id-space indexes (e.g. streaming
-        appends) to the sort-based sparse path."""
+        """Exclusive upper bound on doc ids (for bmx's dense
+        accumulators); a huge sentinel makes bmx decline unknown-id-space
+        indexes (e.g. streaming appends)."""
         m = self.stats.get("max_doc_id")
         if m is not None:
             return int(m) + 1
@@ -883,70 +815,61 @@ class FuseIndex:
         mode: str = "bm25",
         conjunctive: bool = False,
     ) -> DataFrame:
-        """Executor-side scoring: decode → one groupBy(doc_id) → top-k.
+        """Executor-side scoring: one task per visible doc-range bucket.
 
-        Scales to arbitrarily hot terms (nothing term-sized is collected
-        to the driver). Returns a DataFrame (doc_id, score)."""
+        Each task reads its bucket's chunk rows of the query terms
+        (:func:`read_chunk_rows`, the driver fetch's pyarrow read),
+        decodes them into :class:`TermPostings` and yields the bucket's
+        top-k from :func:`exhaustive_topk`, the driver's kernel (TF-IDF
+        norms through :func:`read_norm_rows`). Buckets are doc-disjoint,
+        so every doc's score is complete inside one task and the
+        ``orderBy().limit()`` over k rows per task is exact: the plan is
+        Range -> MapInArrow -> TakeOrderedAndProject, no Exchange.
+        Nothing term-sized reaches the driver. Returns a DataFrame
+        (doc_id, score)."""
         self._refresh_if_stale()
-        spark = self.spark
-        q_tfs = self._query_terms(query)
-        if not q_tfs:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        dfs = self._fetch_dfs(sorted(q_tfs))
-        terms = [t for t in sorted(q_tfs) if t in dfs]
-        if not terms or (conjunctive and len(terms) < len(q_tfs)):
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        n_terms = len(terms)
-        k1, b, avgdl, n_docs = self.k1, self.b, self.avgdl, self.n_docs
-        if mode == "bm25":
-            term_w = {t: float(q_tfs[t]) * bm25_idf(dfs[t], n_docs) for t in terms}
-        else:
-            term_w = {t: tfidf_weight(q_tfs[t], dfs[t], n_docs) for t in terms}
-        term_df = {t: dfs[t] for t in terms}
-        q_norm = math.sqrt(sum(w * w for w in term_w.values())) if mode == "tfidf" else 1.0
-        contrib_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("contrib", T.DoubleType(), False),
-            ]
-        )
-
-        def decode_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    d, t, l = codec.decode_postings(bytes(row.payload), int(row.df_chunk))
-                    if mode == "bm25":
-                        c = term_w[row.term] * codec.bm25_partials(t, l, avgdl, k1, b)
-                    else:
-                        idf10 = math.log10(n_docs / term_df[row.term])
-                        c = ((1.0 + np.log10(t.astype(np.float64))) * idf10) * term_w[row.term]
-                    outs.append(pd.DataFrame({"doc_id": d, "contrib": c}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        chunks = self._apply_bucket_visibility(self.index_df)
+        norms_dir = self._require_norms() if mode == "tfidf" else None
+        q_tfs, dfs, terms = self._resolve_terms(query, conjunctive)
+        buckets = self._visible_buckets() if terms else []
+        if not buckets:
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
+        index_dir = fsio.join(self.out_dir, "index")
         tparts = self._tpart_filter_vals(terms)
-        if tparts is not None:  # hive partition pruning on tpart dirs
-            chunks = chunks.where(F.col("tpart").isin(tparts))
-        chunks = chunks.where(F.col("term").isin(terms)).select(
-            "term", "df_chunk", "payload"
-        )
-        scored = chunks.mapInPandas(decode_score, contrib_schema)
-        agg = scored.groupBy("doc_id").agg(
-            F.sum("contrib").alias("score"), F.count(F.lit(1)).alias("n_hit")
-        )
-        if conjunctive:
-            agg = agg.where(F.col("n_hit") == n_terms)
-        if mode == "tfidf":
-            ds = self.doc_stats_df.select(
-                "doc_id", F.when(F.col("norm") == 0, 1.0).otherwise(F.col("norm")).alias("norm")
-            )
-            agg = agg.join(ds, "doc_id").withColumn(
-                "score", F.col("score") / (F.col("norm") * F.lit(q_norm))
-            )
+        n_docs, decode_args = self.n_docs, (self.block_size, self.avgdl, self.k1, self.b)
+
+        def score_bucket(batches):  # row i of the range scores buckets[i]
+            import pyarrow as pa
+
+            from pyfusedb_spark.functions.udfs import tame_arrow_threads
+
+            tame_arrow_threads()
+            norm_ds = fsio.dataset(norms_dir, partitioning="hive") if norms_dir else None
+
+            def norms(ids):  # called for TF-IDF only
+                return align_norms(ids, read_norm_rows(norm_ds, ids))
+
+            for batch in batches:
+                for i in batch.column(0).to_pylist():
+                    ds = fsio.dataset(fsio.join(index_dir, f"bucket={buckets[i]}"),
+                                      partitioning="hive")
+                    if not ds.files:
+                        continue
+                    postings = dict.fromkeys(terms, _NO_POSTINGS)
+                    for t, rows in read_chunk_rows(ds, terms, tparts).groupby("term"):
+                        postings[t] = TermPostings.from_chunks(rows, *decode_args)
+                    top = exhaustive_topk(postings, q_tfs, dfs, n_docs, mode,
+                                          conjunctive, top_k, norms)
+                    if top:
+                        ids, scores = zip(*top)
+                        yield pa.RecordBatch.from_arrays(
+                            [pa.array(ids, pa.int64()), pa.array(scores, pa.float64())],
+                            names=["doc_id", "score"],
+                        )
+
+        n = len(buckets)
         return (
-            agg.select("doc_id", "score")
+            self.spark.range(0, n, 1, n)
+            .mapInArrow(score_bucket, RESULT_SCHEMA)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(top_k)
         )

@@ -33,6 +33,7 @@ from pyfusedb_spark.layout import (
     STREAM_BATCH_BUCKET_BASE,
     STREAM_GEN_BUCKET_BASE,
     STREAM_MAX_LEVELS,
+    lexicon_files,
     stream_seg_bucket,
 )
 from pyfusedb_spark.operators.build import IndexConfig
@@ -515,27 +516,13 @@ class IncrementalIndexWriter:
                 continue
         return sorted(out)
 
-    def _lexicon_files(self) -> list[str]:
-        lex = fsio.join(self.out_dir, "lexicon")
-        out = []
-        for name in fsio.listdir(lex):
-            if name.endswith(".parquet"):
-                out.append(fsio.join(lex, name))
-            elif "=" in name and ".tmp-" not in name:
-                sub = fsio.join(lex, name)
-                out.extend(
-                    fsio.join(sub, m) for m in fsio.listdir(sub)
-                    if m.endswith(".parquet")
-                )
-        return sorted(out)
-
     def _lexicon_vocab_ub(self) -> int:
         """Upper bound on distinct terms: Σ row counts over lexicon files
         (parquet footers only — no data read). Exact after a compaction;
         an over-count between compactions only biases the FuseIndex
         small-vocab cache heuristic, never scoring (df sums are exact)."""
         total = 0
-        for f in self._lexicon_files():
+        for f in lexicon_files(fsio.join(self.out_dir, "lexicon")):
             try:
                 total += fsio.parquet_num_rows(f)
             except Exception:
@@ -555,8 +542,8 @@ class IncrementalIndexWriter:
             lexicon/seg=<batch>/part-*.parquet  (term,df,total_tf,...)
             lexicon/seg=<batch>/_batches.json   (exactly-once marker)
 
-        and every reader sums df across segments (FuseIndex._sum_df /
-        _lexicon_seg_files). Every ``compact_every`` live segments the
+        and every reader sums df across segments (FuseIndex._read_dfs /
+        layout.lexicon_files). Every ``compact_every`` live segments the
         writer folds root + segments back into one root lexicon (the
         amortized O(vocabulary) cost), carrying the union of markers in
         the root `_included.json`. Inputs read / files written are
@@ -609,7 +596,7 @@ class IncrementalIndexWriter:
         spark = self.spark
         lex_dir = fsio.join(self.out_dir, "lexicon")
         included = self._lexicon_included()
-        files = self._lexicon_files()
+        files = lexicon_files(lex_dir)
         if not files:
             return
         merged = (

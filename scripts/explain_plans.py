@@ -4,8 +4,8 @@ Evidence that the declarative parts hit the optimizations we rely on:
 - index/lexicon scans show PushedFilters on `term` + pruned ReadSchema;
 - the corpus projection join broadcasts the k-row result side;
 - relational ops run inside WholeStageCodegen;
-- the distributed scorer is scan -> mapInPandas -> one hash agg ->
-  TakeOrderedAndProject (no global sort).
+- the distributed scorer is range -> mapInArrow (one task per bucket)
+  -> TakeOrderedAndProject, with no Exchange.
 
 Usage: python scripts/explain_plans.py [sf_dir]
 """
@@ -66,11 +66,11 @@ def main() -> None:
     sections: list[tuple[str, str, str]] = []
 
     terms = ["merge", "sort"]
-    term_scan = idx.index_df.where(
+    term_scan = spark.read.parquet(os.path.join(idx_dir, "index")).where(
         F.col("tpart").isin(idx._tpart_filter_vals(terms))
     ).where(F.col("term").isin(terms)).select("term", "df_chunk", "payload")
     sections.append((
-        "Index term lookup (executor path, tpart-addressed)",
+        "Index term lookup (Spark scan of the index, tpart-addressed)",
         "Expect: PartitionFilters [tpart IN (…)] — the bucket-salted term "
         "hash addresses the exact index/bucket=K/tpart=P directories, so "
         "the scan lists only those dirs; PushedFilters [In(term, …)] plus "
@@ -81,9 +81,10 @@ def main() -> None:
 
     sections.append((
         "Distributed BM25 search",
-        "Expect: scan -> ArrowEvalPython/MapInPandas (decode+partial score) "
-        "-> partial_sum HashAggregate -> exchange -> HashAggregate -> "
-        "TakeOrderedAndProject (no global Sort).",
+        "Expect: Range -> MapInArrow -> TakeOrderedAndProject, no Exchange: "
+        "one task per visible doc-range bucket reads its chunks through "
+        "pyarrow and yields its local top-k (the driver's exhaustive "
+        "kernel); the k rows per task are merged without a shuffle.",
         fmt(idx.search_distributed("merge sort join", 10)),
     ))
 

@@ -221,7 +221,9 @@ def test_ivf_and_graph_via_file_uri(spark, tmp_path):
 def test_streaming_append_via_file_uri(spark, tmp_path):
     """Incremental streaming appends work against a scheme-qualified
     root: segment writes via Spark (URI-native), markers/stats/GC via
-    fsio. Two batches must be searchable and oracle-exact."""
+    fsio. Two batches must be searchable and oracle-exact, with the
+    lexicon (LSM ``seg=B`` files listed through the URI) read both
+    whole into the driver cache and per query (huge-vocab branch)."""
     from pyfusedb_spark.analysis import Analyzer
     from pyfusedb_spark.oracle import OracleIndex
     from pyfusedb_spark.streaming.incremental import IncrementalIndexWriter
@@ -237,12 +239,16 @@ def test_streaming_append_via_file_uri(spark, tmp_path):
             "doc_id long, content string",
         )
         writer.process_batch(batch, b)
-    idx = FuseIndex(spark, out)
     oracle = OracleIndex(Analyzer("english")).build(docs)
-    for q in QUERIES:
-        got = idx.search(q, 10)
-        expect = oracle.search_bm25(q, 10)
-        assert [d for d, _ in got] == [d for d, _ in expect], q
-        np.testing.assert_allclose(
-            [s for _, s in got], [s for _, s in expect], atol=1e-9
-        )
+    for lexicon_cache_max in (None, 0):
+        idx = FuseIndex(spark, out)
+        if lexicon_cache_max is not None:
+            idx._lexicon_cache_max = lexicon_cache_max
+        for q in QUERIES:
+            got = idx.search(q, 10)
+            expect = oracle.search_bm25(q, 10)
+            assert [d for d, _ in got] == [d for d, _ in expect], q
+            np.testing.assert_allclose(
+                [s for _, s in got], [s for _, s in expect], atol=1e-9
+            )
+        assert (idx._lexicon_pd is None) == (lexicon_cache_max == 0)

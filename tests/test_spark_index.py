@@ -126,6 +126,37 @@ def test_conjunctive_and_mode(pangram_index, pangram_oracle):
     assert pangram_index.search_distributed("quick zzzmissing", 10, conjunctive=True).count() == 0
 
 
+def test_distributed_plan_has_no_exchange(pangram_index):
+    """search_distributed scores each doc-range bucket in its own task
+    and merges k rows per task: the executed plan is Range -> MapInArrow
+    -> TakeOrderedAndProject, with no shuffle Exchange."""
+    for kw in ({}, {"mode": "tfidf"}, {"conjunctive": True}):
+        df = pangram_index.search_distributed("quick fox", 10, **kw)
+        assert df.collect(), kw
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert "MapInArrow" in plan and "TakeOrderedAndProject" in plan, plan
+
+
+@pytest.mark.parametrize("path", ["search", "search_distributed"])
+def test_tfidf_without_norms_raises(spark, tmp_path, path):
+    """An index built with compute_norms=False has no doc_stats_full:
+    TF-IDF is refused with a ValueError naming the fix on both paths,
+    while BM25 still answers."""
+    out = str(tmp_path / "no_norms")
+    corpus = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
+    )
+    build_index(spark, corpus, out, doc_id_col="doc_id",
+                config=IndexConfig(n_buckets=2, shuffle_partitions=4, compute_norms=False))
+    idx = FuseIndex(spark, out)
+    search = getattr(idx, path)
+    with pytest.raises(ValueError, match=r"compute_norms=True"):
+        search("quick fox", 10, mode="tfidf")
+    assert idx.search("quick fox", 10)
+    assert search("quick fox", 10, mode="bm25")
+
+
 def test_flowers_relevance(spark, tmp_path):
     out = str(tmp_path / "flowers")
     corpus = spark.createDataFrame(

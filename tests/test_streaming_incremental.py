@@ -473,3 +473,32 @@ def test_tiered_compaction_64_batches(spark, tmp_path, use_uri):
     # chunk rows for a hot term mirror the component bound
     n_quick, _ = _chunk_rows_per_term(out, "quick")
     assert 0 < n_quick <= len(seg_buckets) + len(live_batches)
+
+
+def test_driver_and_distributed_agree_after_stream_append(spark, tmp_path):
+    """A normed base build plus one streamed batch: the driver and the
+    distributed path read the same buckets with the same kernel and the
+    same norms, so they return the same ids and scores for BM25, TF-IDF
+    (streamed docs have no stored norm: 1.0 on both paths) and AND."""
+    from pyfusedb_spark.operators.build import build_index
+
+    out = str(tmp_path / "base_plus_stream")
+    cfg = IndexConfig(preset="english", n_buckets=2, n_tparts=1, shuffle_partitions=4)
+    rows = [(i, c) for i, c in enumerate(PANGRAMS[:19])]
+    build_index(spark, spark.createDataFrame(rows[:15], "doc_id long, content string"),
+                out, doc_id_col="doc_id", config=cfg)
+    IncrementalIndexWriter(spark, out, config=cfg).process_batch(
+        spark.createDataFrame(rows[15:], "doc_id long, content string"), 0
+    )
+    idx = FuseIndex(spark, out)
+    cases = [("quick fox", "bm25", False), ("dog", "tfidf", False),
+             ("flower bloom dog", "tfidf", False), ("quick fox", "bm25", True),
+             ("dog cat", "bm25", True)]
+    for q, mode, conj in cases:
+        got = idx.search(q, 10, mode=mode, conjunctive=conj)
+        dist = [(r["doc_id"], r["score"])
+                for r in idx.search_distributed(q, 10, mode=mode, conjunctive=conj).collect()]
+        assert got, (q, mode, conj)
+        assert [d for d, _ in dist] == [d for d, _ in got], (q, mode, conj)
+        np.testing.assert_allclose([s for _, s in dist], [s for _, s in got], atol=1e-9)
+    assert {d for d, _ in idx.search("dog", 10, mode="tfidf")} & {15, 16, 17, 18}

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from pyfusedb_spark.functions import codec
-from pyfusedb_spark.operators.query import TermPostings
+from pyfusedb_spark.operators.query import TermPostings, exhaustive_topk
 from pyfusedb_spark.oracle import bm25_idf, bm25_partial
 
 K1, B = 1.2, 0.75
@@ -65,7 +65,6 @@ class _BmxStub:
 
     _dense_id_bound = _FI._dense_id_bound
     _blockmax_vectorized = _FI._blockmax_vectorized
-    _exhaustive = _FI._exhaustive
     _score = _FI._score
     _hot_cut = staticmethod(_FI._hot_cut)
 
@@ -184,4 +183,42 @@ def test_wand_heavy_ties():
         hot_only = np.setdiff1d(hot_ids, rare_ids)
         assert [d for d, _ in got] == [d for d, _ in expect]
         assert [d for d, _ in got] == np.concatenate([rare_ids, hot_only])[:k].tolist()
+        np.testing.assert_allclose([s for _, s in got], [s for _, s in expect], atol=1e-9)
+
+
+@pytest.mark.parametrize("conjunctive", [False, True], ids=["or", "and"])
+def test_exhaustive_topk_any_id_range(conjunctive):
+    """The shared exhaustive kernel sizes its accumulator from the ids it
+    gets: ids near 0, ids far from 0 (a streamed bucket) and ids spread
+    wider than the dense accumulator (the sort-based path) all give the
+    reference ranking, OR and AND."""
+    rng = np.random.default_rng(7)
+    n_docs, k, block_size = 600, 10, 16
+    dls = rng.integers(5, 200, size=n_docs)
+    avgdl = float(dls.mean())
+    postings, per_term, q_tfs, dfs = {}, {}, {}, {}
+    for name, df in (("a", 300), ("b", 200), ("c", 40)):
+        chunks, doc_ids, tfs = _make_chunks(rng, n_docs, df, avgdl, dls, block_size)
+        postings[name] = TermPostings.from_chunks(chunks, block_size, avgdl, K1, B)
+        per_term[name] = (doc_ids, tfs)
+        q_tfs[name], dfs[name] = 1, df
+    scores, hits = {}, {}
+    for name, (doc_ids, tfs) in per_term.items():
+        qw = bm25_idf(dfs[name], n_docs)
+        for d, tf in zip(doc_ids, tfs):
+            scores[d] = scores.get(d, 0.0) + qw * bm25_partial(tf, dls[d], avgdl, K1, B)
+            hits[d] = hits.get(d, 0) + 1
+    if conjunctive:
+        scores = {d: v for d, v in scores.items() if hits[d] == len(per_term)}
+    expect = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
+    assert expect
+    for shift in (lambda d: d, lambda d: d + (1 << 30),
+                  lambda d: d + np.where(d >= n_docs // 2, 1 << 27, 0)):
+        moved = {
+            t: TermPostings(shift(p.docs), p.tfs, p.partials, p.blk_start,
+                            shift(p.blk_first), shift(p.blk_last), p.blk_max, p.max_partial)
+            for t, p in postings.items()
+        }
+        got = exhaustive_topk(moved, q_tfs, dfs, n_docs, "bm25", conjunctive, k)
+        assert [d for d, _ in got] == [int(shift(np.int64(d))) for d, _ in expect]
         np.testing.assert_allclose([s for _, s in got], [s for _, s in expect], atol=1e-9)
