@@ -356,12 +356,48 @@ def find_tmp_dirs(root: str) -> list[str]:
     return [prefix + d for d in kept]
 
 
-def parquet_num_rows(path: str) -> int:
-    """Row count from the parquet footer only (no data read)."""
-    import pyarrow.parquet as pq
+def parquet_files(path: str) -> list[str]:
+    """Sorted parquet data files directly under a dir (empty if missing).
+    Names starting with ``.`` or ``_`` are skipped, as pyarrow dataset
+    discovery skips them (``_SUCCESS``, ``.crc``, in-progress tmp files)."""
+    return sorted(
+        join(path, n) for n in listdir(path)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    )
+
+
+def _open_input_file(path: str):
+    import pyarrow as pa
 
     if not is_uri(path):
-        return pq.ParquetFile(path).metadata.num_rows
+        return pa.OSFile(path, "rb")
     fs, p = get_fs(path)
-    with fs.open_input_file(p) as f:
-        return pq.ParquetFile(f).metadata.num_rows
+    return fs.open_input_file(p)
+
+
+def parquet_metadata(path: str):
+    """The parquet footer (``FileMetaData``) only — no data read."""
+    import pyarrow.parquet as pq
+
+    with _open_input_file(path) as f:
+        return pq.read_metadata(f)
+
+
+def read_parquet(path: str, columns: list[str], row_groups: list[int] | None = None,
+                 metadata=None):
+    """``columns`` of one parquet file as a pyarrow Table: every row, or
+    only ``row_groups``. A cached ``metadata`` footer skips the footer
+    read; the file is open for this call only. Decoded on the calling
+    thread: the reads are small, and callers run many at once."""
+    import pyarrow.parquet as pq
+
+    with _open_input_file(path) as f:
+        pf = pq.ParquetFile(f, metadata=metadata)
+        if row_groups is None:
+            return pf.read(columns=columns, use_threads=False)
+        return pf.read_row_groups(row_groups, columns=columns, use_threads=False)
+
+
+def parquet_num_rows(path: str) -> int:
+    """Row count from the parquet footer only (no data read)."""
+    return parquet_metadata(path).num_rows

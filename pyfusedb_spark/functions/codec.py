@@ -283,6 +283,23 @@ def decode_postings(payload: bytes, n_postings: int) -> tuple[np.ndarray, np.nda
     return doc_ids, tfs, dls
 
 
+def decode_postings_multi(payload_all: bytes, n_postings: np.ndarray
+                          ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode chunks laid end to end in one buffer (chunk i holds
+    ``n_postings[i]`` postings) in one varint pass -> flat (doc_ids, tfs,
+    dls), chunk i's postings contiguous and in chunk order."""
+    counts = np.asarray(n_postings, dtype=np.int64)
+    vals = varint_decode(payload_all, 0, 3 * int(counts.sum()))
+    gaps = vals[0::3].astype(np.int64)
+    tfs = vals[1::3].astype(np.int64)
+    dls = vals[2::3].astype(np.int64)
+    csum = np.cumsum(gaps)
+    first = np.cumsum(counts) - counts  # each chunk's first posting
+    base = np.where(first > 0, csum[np.maximum(first - 1, 0)] if csum.size else 0, 0)
+    doc_ids = csum - np.repeat(base, counts) - 1  # gaps restart at every chunk
+    return doc_ids, tfs, dls
+
+
 def decode_block_run(
     payload: bytes,
     block_offsets: np.ndarray,

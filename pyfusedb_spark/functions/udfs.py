@@ -104,6 +104,16 @@ def term_tpart_probe(term: str, n_tparts: int, spread: int) -> list[int]:
     return sorted({(base + j) % n_tparts for j in range(max(1, spread))})
 
 
+def term_tpart_in_bucket(term: str, bucket: int, n_tparts: int, spread: int) -> int:
+    """The one tpart id holding ``term``'s chunk in doc-range bucket
+    ``bucket``: the routing rule above with the bucket's own salt. The
+    build, stream batches and folds all write with it, so a reader that
+    knows the bucket opens one dir per term."""
+    import zlib
+
+    return (zlib.crc32(term.encode("utf-8")) + bucket % max(1, spread)) % n_tparts
+
+
 def make_run_packer(bucket_span: int, n_tparts: int, tpart_spread: int):
     """Returns ``pack_batch(ids, counters, lens)``: one Arrow batch of
     corpus rows (doc ids, per-doc term Counters and per-doc token
@@ -613,6 +623,18 @@ TPART_STATS_SCHEMA = T.StructType(
 )
 
 
+def write_chunk_file(tbl, out_path: str, row_group_rows: int = 1024) -> int:
+    """Write one term-sorted chunk (or lexicon) file atomically; returns
+    its size. Small row groups with min/max stats only on ``term`` (the
+    pruning key the query fetch reads from the footer): min/max over
+    multi-MB binary payload cells is pure write-time overhead;
+    dictionary encoding of unique payloads likewise."""
+    return fsio.write_parquet_atomic(
+        tbl, out_path, row_group_size=row_group_rows, compression="snappy",
+        use_dictionary=False, write_statistics=["term"],
+    )
+
+
 def make_tpart_build_task(
     tf_dir: str,
     idx_dir: str,
@@ -685,15 +707,6 @@ def make_tpart_build_task(
         ]
     )
 
-    def _write_atomic(tbl: "pa.Table", out_path: str) -> int:
-        # stats only on `term` (the pruning key): min/max over multi-MB
-        # binary payload cells is pure write-time overhead; dictionary
-        # encoding of unique payloads likewise
-        return fsio.write_parquet_atomic(
-            tbl, out_path, row_group_size=row_group_rows, compression="snappy",
-            use_dictionary=False, write_statistics=["term"],
-        )
-
     def _clean_own_slices(tp: int) -> None:
         # task-side finalize, step 1: this tpart's previous output (a
         # failed attempt mid-task, or an overwrite rebuild) must go
@@ -733,7 +746,7 @@ def make_tpart_build_task(
             sub = tbl.take(pa.array(idx)).drop_columns(["bucket"])  # term order kept
             out_dir = fsio.join(idx_dir, f"bucket={k}", f"tpart={tp}")
             fsio.makedirs(out_dir)
-            nbytes = _write_atomic(sub, fsio.join(out_dir, "part-0.parquet"))
+            nbytes = write_chunk_file(sub, fsio.join(out_dir, "part-0.parquet"), row_group_rows)
             npost_k = int(df_col[idx].sum())
             share = micros * npost_k // total_post if total_post else 0
             rows.append(
@@ -761,7 +774,7 @@ def make_tpart_build_task(
         )
         lex_slice = fsio.join(lex_dir, f"tpart={tp}")
         fsio.makedirs(lex_slice)
-        lex_bytes = _write_atomic(lex, fsio.join(lex_slice, "part-0.parquet"))
+        lex_bytes = write_chunk_file(lex, fsio.join(lex_slice, "part-0.parquet"), row_group_rows)
         rows.append(
             (tp, -1, int(len(starts)), total_post, lex_bytes, micros,
              str(terms_col[0]), str(terms_col[-1]))

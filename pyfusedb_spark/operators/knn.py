@@ -552,6 +552,14 @@ def _build_segment_graph(xn: np.ndarray, m: int) -> list[np.ndarray]:
     return [np.fromiter(sorted(a), dtype=np.int64, count=len(a)) for a in adj]
 
 
+def _row_cosines(xn: np.ndarray, rows, qn: np.ndarray) -> np.ndarray:
+    """Cosine of each row in ``rows`` against ``qn``, each a reduction over
+    its own row: a batched ``xn[rows] @ qn`` rounds differently with the
+    batch's shape, so bit-identical vectors could score apart and break
+    the (-score, id) tie order."""
+    return (xn[rows] * qn).sum(axis=1)
+
+
 def _beam_search(
     xn: np.ndarray, nbrs: list[np.ndarray], entry: int,
     qn: np.ndarray, ef: int,
@@ -570,7 +578,7 @@ def _beam_search(
     ef = min(ef, n)
     visited = np.zeros(n, dtype=bool)
     visited[entry] = True
-    s0 = float(xn[entry] @ qn)
+    s0 = float(_row_cosines(xn, [entry], qn)[0])
     cand = [(-s0, entry)]   # max-heap on cosine (min-heap on negation)
     top: list[tuple[float, int]] = [(s0, entry)]  # min-heap of best ef
     n_visited = 1
@@ -586,7 +594,7 @@ def _beam_search(
             continue
         visited[nb] = True
         n_visited += len(nb)
-        ss = xn[nb] @ qn  # one vectorized distance batch per expansion
+        ss = _row_cosines(xn, nb, qn)  # one vectorized distance batch per expansion
         for s, j in zip(ss.tolist(), nb.tolist()):
             if len(top) < ef or s > top[0][0]:
                 heapq.heappush(cand, (-s, j))

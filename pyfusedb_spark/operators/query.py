@@ -4,16 +4,20 @@ Replaces the reference's sequential scan of ``final_index.bin``
 (``InvertedIndexFinal.search``, ``app/InvertedIndexFinal.py:348-425``)
 with:
 
-- a *driver fast path*: predicate-pushdown fetch of the ≤|q| posting
-  chunks (Parquet row-group pruning on the term-sorted index files),
-  decoded ONCE per term into a score-ready :class:`TermPostings` (doc
-  ids, BM25 doc-side partials, tfs, block metadata) that the driver LRU
-  keeps; a warm search is dict lookups plus numpy scoring over those
-  arrays — exhaustive, or the vectorized **block-max** scorer ("bmx",
-  R4 + C4 in SURVEY.md §2) — the reference has no early termination at
-  all (full sort, ``app/InvertedIndex.py:384``);
+- a *driver fast path*: a direct-addressed fetch of the ≤|q| posting
+  chunks — per visible bucket, each term opens the one ``tpart=P`` dir
+  the build routed it to and reads only the row groups whose cached
+  footer ``term`` range covers it (:func:`read_bucket_rows`; the
+  reference seeks to a known offset, ``read_postings``,
+  ``app/InvertedIndexFinal.py:172-199``) — decoded ONCE per term into a
+  score-ready :class:`TermPostings` (doc ids, BM25 doc-side partials,
+  tfs, block metadata) that the driver LRU keeps; a warm search is dict
+  lookups plus numpy scoring over those arrays — exhaustive, or the
+  vectorized **block-max** scorer ("bmx", R4 + C4 in SURVEY.md §2) — the
+  reference has no early termination at all (full sort,
+  ``app/InvertedIndex.py:384``);
 - a *distributed path*: one Spark task per visible doc-range bucket
-  reads that bucket's chunks through the same pyarrow read, decodes
+  reads that bucket's chunks through the same reader, decodes
   them into the same :class:`TermPostings` and runs the same
   :func:`exhaustive_topk` kernel; ``orderBy().limit(k)`` merges the
   per-bucket top-k rows (TakeOrderedAndProject, no Exchange — a doc's
@@ -21,14 +25,14 @@ with:
 
 Both paths are rank-identical to ``pyfusedb_spark.oracle`` with total tie
 order (-score, doc_id) (SURVEY.md §7.5). Both read the index only through
-pyarrow (``fsio.dataset``), so an unreadable index raises.
+pyarrow (``fsio``), so an unreadable index raises.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -39,6 +43,7 @@ from pyspark.sql import types as T
 from pyfusedb_spark import fsio
 from pyfusedb_spark.analysis import Analyzer
 from pyfusedb_spark.functions import codec
+from pyfusedb_spark.functions.udfs import term_tpart_in_bucket
 from pyfusedb_spark.layout import (
     STREAM_BATCH_BUCKET_BASE,
     STREAM_GEN_BUCKET_BASE,
@@ -134,23 +139,99 @@ _CHUNK_COLS = (
 )
 
 
-def read_chunk_rows(ds, terms: list[str], tparts: list[int] | None,
-                    where=None) -> pd.DataFrame:
-    """Chunk rows of ``terms`` from a pyarrow dataset over ``index`` or one
-    ``index/bucket=K`` dir, sorted by term (then bucket, if a column):
-    ``term IN`` prunes term-sorted row groups, ``tparts`` (None = no tpart
-    layout) the ``tpart=P`` dirs; ``where`` is an extra filter."""
+_READ_COLS = [c for c in _CHUNK_COLS if c != "bucket"]  # bucket is the dir's
+
+
+def _term_ranges(md) -> list[tuple[str, str] | None]:
+    """Per row group, the (min, max) ``term`` of a parquet footer; None
+    for a group without usable ``term`` statistics (always read)."""
+    ti = next(i for i in range(md.num_columns) if md.schema.column(i).path == "term")
+    out = []
+    for r in range(md.num_row_groups):
+        st = md.row_group(r).column(ti).statistics
+        ok = st is not None and st.has_min_max and isinstance(st.min, str)
+        out.append((st.min, st.max) if ok else None)
+    return out
+
+
+def _covers(terms: list[str], rng: tuple[str, str] | None) -> bool:
+    """Whether a row group with ``term`` range ``rng`` (None: unknown)
+    can hold one of the sorted ``terms``."""
+    if rng is None:
+        return True
+    i = bisect.bisect_left(terms, rng[0])
+    return i < len(terms) and terms[i] <= rng[1]
+
+
+def _dir_footers(d: str, footers: dict | None) -> list[tuple]:
+    """(path, FileMetaData, term ranges) of every parquet file in dir
+    ``d``, from ``footers`` when cached there (and cached on a miss)."""
+    got = footers.get(d) if footers is not None else None
+    if got is None:
+        got = []
+        for path in fsio.parquet_files(d):
+            md = fsio.parquet_metadata(path)
+            got.append((path, md, _term_ranges(md)))
+        if footers is not None:
+            footers[d] = got
+    return got
+
+
+def read_bucket_rows(bucket_dir: str, bucket: int, terms: list[str], n_tparts: int | None,
+                     spread: int, footers: dict | None = None,
+                     counts: dict | None = None):
+    """Chunk rows of ``terms`` in one ``index/bucket=K`` dir, as a pyarrow
+    Table with a ``bucket`` column (None when no row matches).
+
+    Each term is read from the one ``tpart=P`` dir the build routed it to
+    in this bucket (:func:`~pyfusedb_spark.functions.udfs.term_tpart_in_bucket`);
+    a bucket without the tpart layout (``n_tparts`` None) reads every
+    file in the dir. Within a file only the row groups whose footer
+    ``term`` range covers a query term are read (a group without stats
+    always is), then rows are filtered to ``terms``. ``footers`` caches
+    dir listings and footers across calls (files are reopened per read,
+    never kept open); ``counts`` accumulates ``fetch_files`` and
+    ``fetch_row_groups``."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    flt = pc.field("term").isin(terms)
-    if tparts is not None and "tpart" in ds.schema.names:
-        flt = pc.field("tpart").isin(tparts) & flt
-    if where is not None:
-        flt = flt & where
-    cols = [c for c in _CHUNK_COLS if c in ds.schema.names]
-    pdf = ds.to_table(filter=flt, columns=cols).to_pandas()
-    keys = [c for c in ("term", "bucket") if c in cols]
-    return pdf.sort_values(keys, kind="mergesort").reset_index(drop=True)
+    by_dir: dict[str, list[str]] = {}
+    for t in terms:
+        d = (fsio.join(bucket_dir, f"tpart={term_tpart_in_bucket(t, bucket, n_tparts, spread)}")
+             if n_tparts else bucket_dir)
+        by_dir.setdefault(d, []).append(t)
+    parts = []
+    for d, ts in by_dir.items():
+        ts.sort()
+        for path, md, ranges in _dir_footers(d, footers):
+            rgs = [r for r, rng in enumerate(ranges) if _covers(ts, rng)]
+            if not rgs:
+                continue
+            tbl = fsio.read_parquet(path, _READ_COLS, rgs, md)
+            if counts is not None:
+                counts["fetch_files"] += 1
+                counts["fetch_row_groups"] += len(rgs)
+            tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=pa.array(ts)))
+            if tbl.num_rows:
+                parts.append(tbl)
+    if not parts:
+        return None
+    # Spark-written stream files are `not null` where pyarrow's are
+    # nullable, and name list items differently: unify, do not require
+    tbl = pa.concat_tables(parts, promote_options="default")
+    return tbl.append_column("bucket", pa.array(np.full(tbl.num_rows, bucket, np.int32)))
+
+
+def chunk_frame(tables: list) -> pd.DataFrame:
+    """:func:`read_bucket_rows` results (Nones skipped) as one DataFrame
+    sorted by (term, bucket) — per term, doc order (layout.py)."""
+    import pyarrow as pa
+
+    tables = [t for t in tables if t is not None]
+    if not tables:
+        return pd.DataFrame(columns=list(_CHUNK_COLS))
+    tbl = pa.concat_tables(tables, promote_options="default")
+    return tbl.sort_by([("term", "ascending"), ("bucket", "ascending")]).to_pandas()
 
 
 def read_norm_rows(ds, ids: np.ndarray) -> pd.DataFrame:
@@ -324,8 +405,15 @@ class FuseIndex:
         self.block_size = cfg["block_size"]
         self.n_docs = self.stats["n_docs"]
         self.avgdl = self.stats["avgdl"]
+        # tpart routing (udfs.term_tpart_in_bucket); None = flat layout
+        self.n_tparts = self.stats.get("n_tparts")
+        self.tpart_spread = int(self.stats.get("tpart_spread") or 1)
         self._lexicon_pd: dict[str, int] | None = None
-        self._pa_index = None  # lazy pyarrow dataset over the index dir
+        # fetch addressing, read once per stats.json: the visible bucket
+        # ids and, per chunk dir, its files' footers (read_bucket_rows)
+        self._buckets: list[int] | None = None
+        self._footers: dict[str, list[tuple]] = {}
+        self._fetch_io = {"fetch_files": 0, "fetch_row_groups": 0}
         self._pa_doc_stats = None  # lazy pyarrow dataset over doc_stats_full
         norms_dir = fsio.join(self.out_dir, "doc_stats_full")
         self._norms_dir = norms_dir if fsio.isdir(norms_dir) else None
@@ -338,7 +426,7 @@ class FuseIndex:
         # old path materialized EVERY doc_stats row on the driver for
         # one cosine query — O(n_docs) memory, a non-starter at 10^12
         # docs. Now only the current query's candidates are fetched
-        # (pyarrow pushdown, mirroring _fetch_chunks) and kept warm.
+        # (pyarrow pushdown read of doc_stats_full) and kept warm.
         self._norms_cache = _NormsCache()
         self._norms_cache_budget = 32 << 20  # bytes of the cache's arrays
         # driver-side LRU of decoded, score-ready postings per term: a
@@ -358,8 +446,8 @@ class FuseIndex:
 
         A FuseIndex held across streaming/incremental appends
         (streaming/incremental.py rewrites stats.json per micro-batch)
-        would otherwise keep serving the pyarrow dataset's frozen file
-        listing and the stale lexicon/norms — silently missing every
+        would otherwise keep serving its frozen bucket and file listing
+        and the stale lexicon/norms — silently missing every
         appended posting. One os.stat per search."""
         path = fsio.join(self.out_dir, "stats.json")
         try:
@@ -368,7 +456,7 @@ class FuseIndex:
             return
         if sig != self._stats_sig:
             try:
-                self._load_stats()  # also resets _pa_index/_lexicon_pd/_norms caches
+                self._load_stats()  # also resets the listing/lexicon/norms caches
             except (json.JSONDecodeError, OSError):
                 # stats.json writes are tmp+os.replace atomic, but a
                 # non-posix filesystem could still surface a torn read:
@@ -445,7 +533,8 @@ class FuseIndex:
         lookup. The rest are fetched by ``_fetch_chunks_uncached`` and
         decoded here, once, into :class:`TermPostings` entries that the
         cache keeps under its byte budget. Hit/miss/decoded counts land
-        in ``_fetch_counts`` for ``last_search_stats``."""
+        in ``_fetch_counts`` for ``last_search_stats``, with the files
+        and row groups the fetch read (0 when every term hit)."""
         cache = self._chunk_cache
         out: dict[str, TermPostings] = {}
         for t in terms:
@@ -455,6 +544,7 @@ class FuseIndex:
                 out[t] = entry
         missing = [t for t in terms if t not in out]
         decoded = 0
+        self._fetch_io = {"fetch_files": 0, "fetch_row_groups": 0}
         if missing:
             fetched = self._fetch_chunks_uncached(missing)
             for t, rows in fetched.groupby("term", sort=False):
@@ -470,6 +560,7 @@ class FuseIndex:
             "chunk_cache_hits": len(terms) - len(missing),
             "chunk_cache_misses": len(missing),
             "decoded_postings": decoded,
+            **self._fetch_io,
         }
         return out
 
@@ -500,50 +591,39 @@ class FuseIndex:
             out.update(term_tpart_probe(t, int(n), spread))
         return sorted(out)
 
-    def _pa_visibility_filter(self, pc):
-        """pyarrow.compute expression for the same visibility rule, or
-        None when no streaming-compaction state exists."""
-        vis = visible_bucket_components(self.stats)
-        if vis is None:
-            return None
-        segs, folded_upto = vis
-        live_from = STREAM_BATCH_BUCKET_BASE + (
-            folded_upto + 1 if folded_upto is not None else 0
-        )
-        flt = (pc.field("bucket") < STREAM_GEN_BUCKET_BASE) | (
-            pc.field("bucket") >= live_from
-        )
-        if segs:
-            flt = flt | pc.field("bucket").isin(segs)
-        return flt
-
     def _visible_buckets(self) -> list[int]:
-        """Ids of the ``index/bucket=K`` dirs a search reads, ascending:
-        the listed dirs kept by the same visibility expression the
-        driver's fetch pushes down."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        names = fsio.listdir(fsio.join(self.out_dir, "index"))
-        ids = [int(n.split("=", 1)[1]) for n in names
-               if n.startswith("bucket=") and ".tmp-" not in n]
-        vflt = self._pa_visibility_filter(pc)
-        if vflt is not None:
-            tbl = pa.table({"bucket": pa.array(ids, pa.int64())}).filter(vflt)
-            ids = tbl.column("bucket").to_pylist()
-        return sorted(ids)
+        """Ids of the ``index/bucket=K`` dirs a search reads, ascending —
+        the one visibility rule (layout.visible_bucket_components): base
+        buckets, the segments the stats list, and the batches newer than
+        every segment. Listed once per stats.json."""
+        if self._buckets is None:
+            names = fsio.listdir(fsio.join(self.out_dir, "index"))
+            ids = sorted(int(n.split("=", 1)[1]) for n in names
+                         if n.startswith("bucket=") and ".tmp-" not in n)
+            vis = visible_bucket_components(self.stats)
+            if vis is not None:
+                segs, folded_upto = set(vis[0]), vis[1]
+                live_from = STREAM_BATCH_BUCKET_BASE + (
+                    folded_upto + 1 if folded_upto is not None else 0)
+                ids = [b for b in ids
+                       if b < STREAM_GEN_BUCKET_BASE or b >= live_from or b in segs]
+            self._buckets = ids
+        return self._buckets
 
     def _fetch_chunks_uncached(self, terms: list[str]) -> pd.DataFrame:
         """Chunk rows of ``terms`` over every visible bucket, sorted by
-        (term, bucket): :func:`read_chunk_rows` over the whole index dir
-        through pyarrow — no per-query Spark job (this path IS the
-        driver; the executor path is ``search_distributed``)."""
-        import pyarrow.compute as pc
-
-        if self._pa_index is None:
-            self._pa_index = fsio.dataset(fsio.join(self.out_dir, "index"), partitioning="hive")
-        return read_chunk_rows(self._pa_index, terms, self._tpart_filter_vals(terms),
-                               self._pa_visibility_filter(pc))
+        (term, bucket): :func:`read_bucket_rows` per bucket, with the
+        handle's cached footers — each term opens one tpart dir per
+        bucket and reads only the row groups its footer range covers.
+        No per-query Spark job (this path IS the driver; the executor
+        path is ``search_distributed``). Files and row groups read add
+        to ``_fetch_io``."""
+        index_dir = fsio.join(self.out_dir, "index")
+        return chunk_frame([
+            read_bucket_rows(fsio.join(index_dir, f"bucket={k}"), k, terms, self.n_tparts,
+                             self.tpart_spread, self._footers, self._fetch_io)
+            for k in self._visible_buckets()
+        ])
 
     def _require_norms(self) -> str:
         """The ``doc_stats_full`` dir TF-IDF reads its norms from."""
@@ -615,8 +695,10 @@ class FuseIndex:
         paths are rank-identical (tests force each).
         ``last_search_stats`` records the path, its pruning counts and
         the fetch's ``chunk_cache_hits``, ``chunk_cache_misses`` and
-        ``decoded_postings``. ``mode="tfidf"`` raises ``ValueError`` on
-        an index built without ``compute_norms``."""
+        ``decoded_postings``, plus the ``fetch_files`` and
+        ``fetch_row_groups`` it read (0 on a warm search).
+        ``mode="tfidf"`` raises ``ValueError`` on an index built without
+        ``compute_norms``."""
         if use_wand not in ("auto", "bmx", False):
             raise ValueError(
                 f"use_wand must be 'auto', 'bmx' or False, not {use_wand!r}"
@@ -818,7 +900,7 @@ class FuseIndex:
         """Executor-side scoring: one task per visible doc-range bucket.
 
         Each task reads its bucket's chunk rows of the query terms
-        (:func:`read_chunk_rows`, the driver fetch's pyarrow read),
+        (:func:`read_bucket_rows`, the driver fetch's reader, uncached),
         decodes them into :class:`TermPostings` and yields the bucket's
         top-k from :func:`exhaustive_topk`, the driver's kernel (TF-IDF
         norms through :func:`read_norm_rows`). Buckets are doc-disjoint,
@@ -834,7 +916,7 @@ class FuseIndex:
         if not buckets:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         index_dir = fsio.join(self.out_dir, "index")
-        tparts = self._tpart_filter_vals(terms)
+        n_tparts, spread = self.n_tparts, self.tpart_spread
         n_docs, decode_args = self.n_docs, (self.block_size, self.avgdl, self.k1, self.b)
 
         def score_bucket(batches):  # row i of the range scores buckets[i]
@@ -850,12 +932,11 @@ class FuseIndex:
 
             for batch in batches:
                 for i in batch.column(0).to_pylist():
-                    ds = fsio.dataset(fsio.join(index_dir, f"bucket={buckets[i]}"),
-                                      partitioning="hive")
-                    if not ds.files:
-                        continue
+                    k = buckets[i]
+                    chunks = chunk_frame([read_bucket_rows(
+                        fsio.join(index_dir, f"bucket={k}"), k, terms, n_tparts, spread)])
                     postings = dict.fromkeys(terms, _NO_POSTINGS)
-                    for t, rows in read_chunk_rows(ds, terms, tparts).groupby("term"):
+                    for t, rows in chunks.groupby("term"):
                         postings[t] = TermPostings.from_chunks(rows, *decode_args)
                     top = exhaustive_topk(postings, q_tfs, dfs, n_docs, mode,
                                           conjunctive, top_k, norms)

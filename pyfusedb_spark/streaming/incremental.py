@@ -26,8 +26,18 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pyfusedb_spark.functions.udfs import CHUNK_SCHEMA, make_chunk_encoder, sha256_col, term_freqs_udf
+from pyfusedb_spark.functions import codec
+from pyfusedb_spark.functions.udfs import (
+    CHUNK_SCHEMA,
+    make_chunk_encoder,
+    make_packed_encoder,
+    sha256_col,
+    tame_arrow_threads,
+    term_freqs_udf,
+    write_chunk_file,
+)
 from pyfusedb_spark import fsio
 from pyfusedb_spark.layout import (
     STREAM_BATCH_BUCKET_BASE,
@@ -40,6 +50,71 @@ from pyfusedb_spark.operators.build import IndexConfig
 from pyfusedb_spark.sources.catalog import ManifestCatalog, write_json_atomic
 
 WAND_AVGDL_TOLERANCE = 0.01  # 1% drift disables block-max pruning
+
+FOLD_TASK_SCHEMA = T.StructType(
+    [
+        T.StructField("tpart", T.IntegerType(), False),
+        T.StructField("bytes", T.LongType(), False),
+    ]
+)
+
+
+def make_fold_task(src: list[str], staging: str, bucket: int, n_tparts: int | None,
+                   spread: int, avgdl: float, k1: float, b: float, block_size: int):
+    """mapInArrow fn of one LSM fold (``IncrementalIndexWriter._fold_segment``):
+    each input row P merges the chunks of the source bucket dirs ``src``
+    that belong in the new segment bucket's ``tpart=P`` and writes them as
+    ``staging/tpart=P/part-0.parquet`` (``staging/part-0.parquet`` for a
+    flat layout, whose one task reads the whole dirs), yielding (P, bytes).
+
+    Every bucket salts the term routing with ``bucket % spread``
+    (udfs.term_tpart_in_bucket), so the terms of target tpart P sit in
+    source tpart ``P - salt(bucket) + salt(source)``: one dir per source,
+    no exchange. Chunks are decoded in one varint pass and re-encoded by
+    the build's packed encoder against ``avgdl``."""
+    import numpy as np
+
+    encode_arrays = make_packed_encoder(avgdl, k1, b, block_size).encode_arrays
+    spread = max(1, spread)
+
+    def source_dir(s: str, tp: int) -> str:
+        if not n_tparts:
+            return s
+        sb = int(fsio.basename(s).split("=", 1)[1])
+        return fsio.join(s, f"tpart={(tp - bucket % spread + sb % spread) % n_tparts}")
+
+    def fold_tpart(tp: int) -> int:
+        import pyarrow as pa
+
+        tbls = [fsio.read_parquet(f, ["term", "df_chunk", "payload"])
+                for s in src for f in fsio.parquet_files(source_dir(s, tp))]
+        tbls = [t for t in tbls if t.num_rows]
+        if not tbls:
+            return 0
+        tbl = pa.concat_tables(tbls, promote_options="default")
+        counts = tbl.column("df_chunk").to_numpy()
+        docs, tfs, dls = codec.decode_postings_multi(
+            b"".join(tbl.column("payload").to_pylist()), counts)
+        terms = np.asarray(tbl.column("term").to_pandas(), dtype=object)
+        # one group per term: every run gets the same (dropped) bucket key
+        enc = encode_arrays(terms, np.zeros(len(terms), np.int64), counts, docs, tfs, dls, pid=tp)
+        out = fsio.join(staging, f"tpart={tp}") if n_tparts else staging
+        fsio.makedirs(out)
+        chunks = pa.Table.from_batches([enc]).drop_columns(["bucket"])
+        return write_chunk_file(chunks, fsio.join(out, "part-0.parquet"))
+
+    def task(batches):
+        import pyarrow as pa
+
+        tame_arrow_threads()
+        for batch in batches:
+            for tp in batch.column(0).to_pylist():
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([tp], pa.int32()), pa.array([fold_tpart(tp)], pa.int64())],
+                    names=["tpart", "bytes"],
+                )
+
+    return task
 
 
 class IncrementalIndexWriter:
@@ -83,8 +158,8 @@ class IncrementalIndexWriter:
         self.last_refresh_written_files: list[str] = []
         # follow the base index's posting layout: a file-shuffle-built
         # index has index/bucket=K/tpart=P dirs and FuseIndex addresses
-        # fetches by tpart — appended segments must land in matching
-        # tpart dirs (mixed hive depths would break dataset discovery).
+        # fetches by tpart — appended segments must land in the tpart dir
+        # each term routes to under their bucket's salt.
         # Fresh stream-only indexes keep the legacy flat layout.
         st = self._current_stats()
         self.n_tparts = st.get("n_tparts")
@@ -372,77 +447,31 @@ class IncrementalIndexWriter:
         """Merge the source dirs into ONE new segment dir
         ``index/bucket=stream_seg_bucket(lo, level)``.
 
-        Merge is a per-term decode → doc-sort → re-encode applyInPandas
-        (chunk ROWS shuffle, payloads stay varint-packed on the wire;
-        doc-disjoint sources make the merged list doc-unique by
-        construction). Re-encode uses the CURRENT global avgdl, so the
-        new segment's block-max bounds are fresh. Visibility flips with
-        the atomic stats.json write (stream_segments) AFTER the dir
-        promote; old dirs are GC'd last — a crash anywhere leaves
+        The merge is a narrow per-tpart wave, the build's file-shuffle
+        shape: ``spark.range(n_tparts).mapInArrow`` task P reads, from
+        each source bucket, the one tpart dir holding the terms that
+        route to ``tpart=P`` under the new bucket's salt, decodes the
+        chunks, and re-encodes every term in one pass with the build's
+        encoder (doc-disjoint sources make each merged list doc-unique)
+        into ``staging/tpart=P``. A flat (stream-only) layout runs one
+        task over the whole dirs. No exchange, and no Spark read of
+        mixed hive depths. Re-encode uses the CURRENT global avgdl, so
+        the new segment's block-max bounds are fresh. Visibility flips
+        with the atomic stats.json write (stream_segments) AFTER the
+        dir promote; old dirs are GC'd last — a crash anywhere leaves
         either the old state or the new state visible, never both."""
-        import numpy as np
-        import pandas as pd
-
-        from pyfusedb_spark.functions import codec
-
         t0 = time.perf_counter()
-        spark = self.spark
         idx = fsio.join(self.out_dir, "index")
         bucket = stream_seg_bucket(lo, level)
-        stats = self._current_stats()
-        avgdl = float(stats["avgdl"]) or 1.0
-        k1, b_, block_size = self.config.k1, self.config.b, self.config.block_size
-
-        def merge_term(pdf: pd.DataFrame) -> pd.DataFrame:
-            te0 = time.perf_counter()
-            runs = [
-                codec.decode_postings(bytes(p), int(n))
-                for p, n in zip(pdf["payload"], pdf["df_chunk"])
-            ]
-            d = np.concatenate([r[0] for r in runs])
-            t = np.concatenate([r[1] for r in runs])
-            dl = np.concatenate([r[2] for r in runs])
-            order = np.argsort(d, kind="stable")  # doc-disjoint -> unique
-            enc = codec.encode_postings(
-                d[order], t[order], dl[order], avgdl, k1, b_, block_size
-            )
-            return pd.DataFrame(
-                {
-                    "pid": [0],
-                    "term": [pdf["term"].iloc[0]],
-                    "df_chunk": [enc.n_postings],
-                    "sum_tf": [int(t.sum())],
-                    "payload": [enc.payload],
-                    "block_offsets": [enc.block_offsets],
-                    "block_first": [enc.block_first],
-                    "block_last": [enc.block_last],
-                    "block_max_partial": [enc.block_max_partial],
-                    "max_partial": [enc.max_partial],
-                    "enc_micros": [int((time.perf_counter() - te0) * 1e6)],
-                }
-            )
-
-        chunks = (
-            spark.read.parquet(*src)
-            .select("term", "df_chunk", "sum_tf", "payload")
-            .groupBy("term")
-            .applyInPandas(merge_term, CHUNK_SCHEMA)
-        )
+        avgdl = float(self._current_stats()["avgdl"]) or 1.0
         final_dir = fsio.join(idx, f"bucket={bucket}")
         staging = self.cat.staging_dir(final_dir)
-        writer = chunks.write.mode("overwrite")
-        if self.n_tparts:
-            j = bucket % max(1, self.tpart_spread)
-            chunks = chunks.withColumn(
-                "tpart",
-                F.pmod(
-                    F.crc32(F.encode(F.col("term"), "UTF-8")) + F.lit(int(j)),
-                    F.lit(int(self.n_tparts)),
-                ).cast("int"),
-            )
-            writer = chunks.write.mode("overwrite").partitionBy("tpart")
-        writer.parquet(staging)
-        seg_bytes = fsio.dir_bytes(staging)
+        fsio.makedirs(staging)
+        task = make_fold_task(src, staging, bucket, self.n_tparts, self.tpart_spread,
+                              avgdl, self.config.k1, self.config.b, self.config.block_size)
+        n = self.n_tparts or 1
+        written = self.spark.range(0, n, 1, n).mapInArrow(task, FOLD_TASK_SCHEMA).collect()
+        seg_bytes = sum(int(r["bytes"]) for r in written)
         self.cat.promote_dir(staging, final_dir)
         self.cat.commit(
             f"stream_seg={bucket}",

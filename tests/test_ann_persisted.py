@@ -253,3 +253,25 @@ def test_persisted_range_search_exact(emb, ivf):
         for r in ivf.range_search(qv, 0.3).collect()
     ]
     assert pruned == full and len(full) > 0
+
+
+def test_beam_search_duplicate_vectors_tie_in_id_order():
+    """Bit-identical vectors score bit-identically whatever the shape of
+    the distance batch they are scored in, so an exact beam returns ties
+    in ascending id order (the brute-force ORDER BY contract)."""
+    x = np.asarray([[((i * 7 + d * 3) % 11) / 11.0 + 0.1 for d in range(8)]
+                    for i in range(40)])
+    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+    adj = knn._build_segment_graph(xn, m=4)
+    for q in (3, 6, 10):
+        qn = xn[q]
+        dup = list(range(q % 11, 40, 11))
+        scores = set()
+        for rows in ([dup[0]], dup, list(range(40)), dup[::-1], [dup[-1], 0, 1]):
+            s = knn._row_cosines(xn, rows, qn)
+            scores.update(float(v) for r, v in zip(rows, s) if r in dup)
+        assert len(scores) == 1, scores
+        for entry in (0, 17, 39):
+            best, _ = knn._beam_search(xn, adj, entry, qn, ef=40)
+            assert [i for _, i in best[:len(dup)]] == dup, (q, entry)
+            assert len({s for s, _ in best[:len(dup)]}) == 1

@@ -8,6 +8,26 @@ from hypothesis import strategies as st
 from pyfusedb_spark.functions import codec
 
 
+def test_decode_postings_multi_matches_per_chunk():
+    """Chunks laid end to end (empty ones included) decode in one pass to
+    exactly the per-chunk decodes, concatenated in chunk order."""
+    rng = np.random.default_rng(7)
+    payloads, counts, want = [], [], []
+    for n in (5, 0, 1, 300, 0, 17):
+        docs = np.sort(rng.choice(10_000, size=n, replace=False)).astype(np.int64)
+        tfs = rng.integers(1, 50, size=n)
+        dls = rng.integers(1, 900, size=n)
+        enc = codec.encode_postings(docs, tfs, dls, 100.0, 1.2, 0.75, 16)
+        payloads.append(enc.payload)
+        counts.append(n)
+        want.append(codec.decode_postings(enc.payload, n))
+    got = codec.decode_postings_multi(b"".join(payloads), np.array(counts))
+    for i in range(3):
+        assert np.array_equal(got[i], np.concatenate([w[i] for w in want]))
+    empty = codec.decode_postings_multi(b"", np.zeros(2, dtype=np.int64))
+    assert all(a.size == 0 for a in empty)
+
+
 def test_varint_roundtrip_edges():
     vals = np.array(
         [0, 1, 127, 128, 129, 16383, 16384, 2**21 - 1, 2**21, 2**63 - 1, 2**64 - 1],

@@ -502,3 +502,46 @@ def test_driver_and_distributed_agree_after_stream_append(spark, tmp_path):
         assert [d for d, _ in dist] == [d for d, _ in got], (q, mode, conj)
         np.testing.assert_allclose([s for _, s in dist], [s for _, s in got], atol=1e-9)
     assert {d for d, _ in idx.search("dog", 10, mode="tfidf")} & {15, 16, 17, 18}
+
+
+def test_default_layout_stream_folds_to_level1_matches_oracle(spark, tmp_path):
+    """Appends onto a default-layout base (2 buckets x 2 tparts, so every
+    bucket salts its tpart routing differently) fold into level-0 and then
+    a level-1 segment. The fold is a per-tpart merge, so it must neither
+    raise on the mixed hive depths of the batch dirs nor lose a term that
+    moves tpart under the segment's salt: BM25 and AND equal the oracle,
+    and the driver and distributed paths agree."""
+    from pyfusedb_spark.layout import STREAM_BATCH_BUCKET_BASE as BB, stream_seg_bucket
+    from pyfusedb_spark.operators.build import build_index
+
+    docs = [PANGRAMS[i % len(PANGRAMS)] + f" filler{i}" for i in range(40)]
+    out = str(tmp_path / "tpart_stream")
+    cfg = IndexConfig(preset="english", n_buckets=2, n_tparts=2, shuffle_partitions=4)
+    build_index(spark, spark.createDataFrame([(i, d) for i, d in enumerate(docs[:20])],
+                                             "doc_id long, content string"),
+                out, doc_id_col="doc_id", config=cfg)
+    writer = IncrementalIndexWriter(spark, out, config=cfg)
+    writer.compact_postings_every = 2
+    for b in range(5):
+        ids = range(20 + 4 * b, 24 + 4 * b)
+        writer.process_batch(
+            spark.createDataFrame([(i, docs[i]) for i in ids], "doc_id long, content string"), b
+        )
+    idx = FuseIndex(spark, out)
+    segs = idx.stats["stream_segments"]
+    assert [(s["lo"], s["hi"], s["level"]) for s in segs] == [(0, 3, 1)]
+    assert idx._visible_buckets() == [0, 1, stream_seg_bucket(0, 1), BB + 4]
+    seg_dir = os.path.join(out, "index", f"bucket={stream_seg_bucket(0, 1)}")
+    assert sorted(os.listdir(seg_dir)) == ["tpart=0", "tpart=1"]
+    oracle = OracleIndex(Analyzer("english")).build(docs)
+    assert idx.n_docs == oracle.n_docs
+    for q in QUERIES + ["filler3 filler33", "dog", "filler21 quick"]:
+        for conj in (False, True):
+            got = idx.search(q, 10, conjunctive=conj)
+            expect = oracle.search_bm25(q, 10, conjunctive=conj)
+            assert [d for d, _ in got] == [d for d, _ in expect], (q, conj)
+            np.testing.assert_allclose([s for _, s in got], [s for _, s in expect], atol=1e-9)
+            dist = [(r["doc_id"], r["score"])
+                    for r in idx.search_distributed(q, 10, conjunctive=conj).collect()]
+            assert [d for d, _ in dist] == [d for d, _ in got], (q, conj)
+            np.testing.assert_allclose([s for _, s in dist], [s for _, s in got], atol=1e-9)
